@@ -766,9 +766,6 @@ def ingest_neardup_flags(spark, sf_dir, sig_family: str = "portable"):
     q_llm_ingest_neardup and the recall gate in tests/test_llm.py."""
     from .dedup import portable_doc_signatures, xxhash_minhash_signatures
 
-    d = parallel_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
     h = F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary"))
     is_batch = F.col("doc_id") % _BATCH_MOD == 0
     if sig_family == "portable":
@@ -778,7 +775,7 @@ def ingest_neardup_flags(spark, sf_dir, sig_family: str = "portable"):
         # probe reads instead of recomputing.
         sigs = portable_doc_signatures(spark, sf_dir)
     else:
-        toks = d.select(
+        toks = parallel_table(spark, sf_dir, "documents").select(
             "doc_id",
             F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
         ).where(F.col("tok") != "")
@@ -806,7 +803,14 @@ def ingest_neardup_flags(spark, sf_dir, sig_family: str = "portable"):
             )
         ).alias("bb"),
     ).select("doc_id", "bb.band", "bb.bucket")
-    ids = d.select("doc_id", "lang", h.alias("h"), is_batch.alias("in_batch"))
+    # ids reads table(), not parallel_table(): the floor's exchange has one
+    # partition per core, so the final doc_id sort-merge join re-shuffles it
+    # (an extra exchange carrying text) unless the core count is at least
+    # spark.sql.shuffle.partitions, and the only per-document work here is
+    # one md5, so the floor bought little and made the plan host-dependent.
+    ids = table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", h.alias("h"), is_batch.alias("in_batch")
+    )
     # in_batch is a pure function of doc_id, so the probe/corpus split is a
     # scan-stage FILTER on the band frame — joining the band explode against
     # ids just to read the flag back paid a full (doc_id) exchange of

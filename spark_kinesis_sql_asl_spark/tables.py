@@ -139,6 +139,13 @@ def parallel_table(
     "repartition the corpus" anti-pattern; it only repairs the degenerate
     small-file case. The explicit numPartitions pins the exchange against
     AQE coalescing (tiny inputs would otherwise collapse back to 1).
+
+    The exchange has ``defaultParallelism`` partitions (one per core). A
+    join on ``key`` downstream reuses it only when that count is at least
+    ``spark.sql.shuffle.partitions``; otherwise the join adds its own
+    exchange, so plan-shape bounds read off one host do not carry to
+    another. Frames feeding such a join with little per-row work should
+    read :func:`table` instead.
     """
     # The split-count probe compiles the plan to an RDD (~110 ms of driver
     # work per call, measured) and the repartition node itself is another
