@@ -846,16 +846,12 @@ def global_rank(df, sort_cols, out_name="_rank", with_total=False):
         )
         .drop("_mid")
     )
-    # Round 14 (guide §1.2/§2.4): the per-partition counts need only the
-    # range exchange, NOT the row_number — counting from `part` instead of
-    # `rn` drops one full window evaluation over the ranked frame
-    # (profiled: theil_sen ran the 2.9M-row sort+row_number once each for
-    # counts and ranks). Everything stays inside ONE action so the range
-    # exchange is planner-reused (ReuseExchange) and every branch sees the
-    # SAME sampled partition boundaries — do NOT checkpoint any branch
-    # here: an eager materialization runs its own copy of the exchange,
-    # whose fresh boundary sample can disagree with the final job's
-    # (measured: theil_sen's median landed on the wrong rank).
+    # Invariant: every branch (rn, counts, and through counts offs and
+    # total) derives from the one checkpointed `part`, so all of them see
+    # its boundaries and `_pid`s. Build no branch from `df` again: a second
+    # range exchange draws its own boundary sample, which can disagree with
+    # `part`'s. The counts read `part`, not `rn`, as they need the layout
+    # only, not the per-partition sort.
     counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     a, b = counts.alias("a"), counts.alias("b")
     offs = (

@@ -12,8 +12,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Spark's internal per-query state-partition count (see ``get_session``).
+STATE_PARTITIONS_KEY = "spark.sql.streaming.internal.stateStore.partitions"
+
 
 def get_session(app_name: str = "spark-kinesis-sql-asl-spark") -> SparkSession:
+    """Return the local session, with one streaming state partition per core.
+
+    A stateful stream commits one state store per state partition on every
+    micro-batch, so on small deltas that fixed per-partition cost is the
+    latency floor. Streams started on this session therefore get
+    ``min(defaultParallelism, spark.sql.shuffle.partitions)`` state
+    partitions, while batch queries keep the 32 shuffle partitions and AQE.
+    Spark has no public streaming-only partition setting, so this sets the
+    internal key that ``StreamExecution.runStream`` otherwise fills from
+    ``spark.sql.shuffle.partitions``; a value already on the session is
+    kept. A checkpoint keeps the count frozen in its offset log.
+    ``tests/test_kinesis_source.py::test_state_partitions_follow_cores``
+    pins the policy and fails if a Spark upgrade drops the key.
+    """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -29,4 +46,13 @@ def get_session(app_name: str = "spark-kinesis-sql-asl-spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if spark.conf.get(STATE_PARTITIONS_KEY, None) is None:
+        spark.conf.set(
+            STATE_PARTITIONS_KEY,
+            str(min(
+                spark.sparkContext.defaultParallelism,
+                int(spark.conf.get("spark.sql.shuffle.partitions")),
+            )),
+        )
+    return spark

@@ -68,7 +68,13 @@ def parquet_stream_writer(out_dir: str):
     """Offline sink twin: each micro-batch lands as parquet under
     ``out_dir/epoch=<id>/`` — idempotent per epoch (overwrite), so a
     retried epoch replaces itself instead of duplicating (the exactly-once
-    contract real sinks implement with sequence tokens)."""
+    contract real sinks implement with sequence tokens).
+
+    The write keeps the micro-batch's partitioning, so an epoch of a
+    stateful stream holds one file per non-empty state partition. On a
+    ``get_session`` session that is ``min(defaultParallelism,
+    spark.sql.shuffle.partitions)``; a checkpoint keeps the count frozen in
+    its offset log (``tests/test_kinesis_source.py`` checks both)."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(

@@ -2,19 +2,28 @@
 
 Covers: registration, batch + streaming reads, offset checkpointing across
 restarts (no loss / no dup), mid-stream shard discovery (resharding),
-LATEST initial position, data-loss policy, multi-stream union.
+LATEST initial position, data-loss policy, multi-stream union, and the
+session's streaming state-partition count (with the sink's files per epoch).
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import glob
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
+from spark_kinesis_sql_asl_spark.session import STATE_PARTITIONS_KEY
+from spark_kinesis_sql_asl_spark.sources.envelope import decode_json_payload
 from spark_kinesis_sql_asl_spark.sources.kinesis_source import (
     KinesisLikeDataSource,
 )
+from spark_kinesis_sql_asl_spark.sources.sink import parquet_stream_writer
 from spark_kinesis_sql_asl_spark.sources.staging import (
     events_to_dicts,
     write_staging,
@@ -519,3 +528,137 @@ def test_reshard_plan_split_executed_no_loss_no_dup(
     # parent closed: tranche 2 contributed nothing to shard-0's band
     bands = {int(r.sequenceNumber) // 1_000_000 for r in t2}
     assert bands == {1, 2, 3}
+
+
+# --- streaming state partitions (session.get_session) ---------------------
+
+# Enough partition keys that every state partition, up to 32, holds some,
+# so each sink epoch writes one file per state partition.
+N_KEYS = 2_000
+
+
+def _keyed_records(n: int, first: int) -> list[dict]:
+    base = dt.datetime(2024, 1, 1)
+    return [
+        {
+            "user_id": i % N_KEYS,
+            "ts": base + dt.timedelta(milliseconds=i),
+            "payload": json.dumps({"k": i % 7}),
+        }
+        for i in range(first, first + n)
+    ]
+
+
+def _run_totals(spark, root: str, out: str, ckpt: str) -> int:
+    """One ``availableNow`` run of the per-key count and sum of ``k`` into
+    ``parquet_stream_writer`` (complete mode, so every epoch holds every
+    key); returns the run's state partition count."""
+    records = spark.readStream.format("kinesislike").option("path", root).load()
+    agg = decode_json_payload(records).groupBy("partitionKey").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("k_val").alias("s")
+    )
+    q = (
+        agg.writeStream.foreachBatch(parquet_stream_writer(out))
+        .outputMode("complete")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(120):
+        q.stop()
+        pytest.fail("availableNow run did not finish in 120 s")
+    assert q.exception() is None, q.exception()
+    return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+
+def _staged_totals(root: str) -> dict:
+    """Per partition key (count, sum of k) over every staged chunk, read
+    with pyarrow alone."""
+    t = pa.concat_tables(
+        pq.read_table(f)
+        for f in glob.glob(os.path.join(root, "events", "*", "*.parquet"))
+    )
+    k = pa.array(
+        [json.loads(b)["k"] for b in t.column("data").to_pylist()], pa.int64()
+    )
+    g = pa.table({"partitionKey": t.column("partitionKey"), "k": k}).group_by(
+        "partitionKey"
+    ).aggregate([("k", "count"), ("k", "sum")])
+    return {r["partitionKey"]: (r["k_count"], r["k_sum"]) for r in g.to_pylist()}
+
+
+def _check_sink(out: str, n_parts: int, expected: dict) -> None:
+    """Every epoch holds one file per state partition; the last epoch's
+    rows equal ``expected`` exactly."""
+    epochs = sorted(
+        glob.glob(os.path.join(out, "epoch=*")),
+        key=lambda d: int(d.rsplit("=", 1)[1]),
+    )
+    assert epochs
+    for d in epochs:
+        assert len(glob.glob(os.path.join(d, "part-*.parquet"))) == n_parts, d
+    last = pq.read_table(glob.glob(os.path.join(epochs[-1], "part-*.parquet")))
+    got = {r["partitionKey"]: (r["n"], r["s"]) for r in last.to_pylist()}
+    assert got == expected
+
+
+def test_state_partitions_follow_cores(registered, tmp_path):
+    """Streams on a ``get_session`` session get one state partition per
+    core, capped at the batch shuffle partitions, while batch queries keep
+    ``spark.sql.shuffle.partitions=32``. Fails if Spark stops honouring
+    ``STATE_PARTITIONS_KEY`` (on a host with fewer than 32 cores)."""
+    spark = registered
+    root = str(tmp_path / "staging")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    want = min(spark.sparkContext.defaultParallelism, 32)
+    assert spark.conf.get(STATE_PARTITIONS_KEY) == str(want)
+
+    write_staging(_keyed_records(3_000, 0), root, n_shards=3, n_chunks=2)
+    assert _run_totals(spark, root, out, ckpt) == want
+    write_staging(
+        _keyed_records(3_000, 3_000), root, n_shards=3, n_chunks=2,
+        start_chunk=2, seq_start=1_000_000,
+    )
+    assert _run_totals(spark, root, out, ckpt) == want
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+    expected = _staged_totals(root)
+    assert sum(n for n, _ in expected.values()) == 6_000
+    _check_sink(out, want, expected)
+
+
+def test_state_partitions_stay_frozen_across_reshard(registered, tmp_path):
+    """A checkpoint made without the policy (Spark freezes the 32 shuffle
+    partitions into its offset log) keeps 32 state partitions when it
+    restarts under the policy after a new shard appears, and its per-key
+    totals stay exact."""
+    spark = registered
+    root = str(tmp_path / "staging")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    frozen = int(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    write_staging(_keyed_records(3_000, 0), root, n_shards=2, n_chunks=2)
+    policy = spark.conf.get(STATE_PARTITIONS_KEY)
+    spark.conf.unset(STATE_PARTITIONS_KEY)
+    try:
+        assert _run_totals(spark, root, out, ckpt) == frozen
+    finally:
+        spark.conf.set(STATE_PARTITIONS_KEY, policy)
+
+    # a new shard dir appears mid-stream (as in the resharding test above)
+    write_staging(
+        _keyed_records(3_000, 3_000), root, stream="_scratch", n_shards=1,
+        n_chunks=2, seq_start=1_000_000,
+    )
+    os.rename(
+        os.path.join(root, "_scratch", "shard-0"),
+        os.path.join(root, "events", "shard-2"),
+    )
+    os.rmdir(os.path.join(root, "_scratch"))
+    assert _run_totals(spark, root, out, ckpt) == frozen
+
+    expected = _staged_totals(root)
+    assert sum(n for n, _ in expected.values()) == 6_000
+    _check_sink(out, frozen, expected)
