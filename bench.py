@@ -79,10 +79,11 @@ def main() -> None:
     failures: dict[str, str] = {}
 
     # Shared-state attribution (round-7 verdict what's-wrong #1): several
-    # families memoize cross-query state per (applicationId, sf_dir) —
-    # PPJoin scored pairs (C2/C116), the containment index (C82/C82s), the
-    # substring-dup span cache (C110/C111), the CC label parquet (C21/C38),
-    # and the trained-centroid/probe state (C77/C125/C127). Whichever family
+    # families hold cross-query state in tables.get_or_build, per Spark
+    # application and fixture files — PPJoin scored pairs (C2/C116), the
+    # containment index (C82/C82s), the substring-dup span cache
+    # (C110/C111), the CC label parquet (C21/C38), and the
+    # trained-centroid/probe state (C77/C125/C127). Whichever family
     # member ran first used to be booked the WHOLE build cost, so its
     # per-query ledger entry was ~2-3x its steady-state time and the
     # regression gate compared noise. Pre-warm each family once here and
@@ -127,10 +128,12 @@ def main() -> None:
         # busy while another family's plan compiles. Measured fresh-JVM
         # A/B on the identical composition: 22.1 s serial, 11.9 s with 3
         # threads, 10.3 s with one thread per family. Safe to overlap:
-        # each family's memoized state is keyed per family (disjoint
-        # dicts), scratch/staging dirs are uuid-unique per call, and the
-        # composition/fixture contract (only _FAMILY_WARMUP names, only
-        # _WARMUP_SF_DIR) is unchanged and still test-pinned.
+        # all family state lives in tables.get_or_build, one store keyed
+        # on the family and the corpus directory, whose lock guards only
+        # the dict (builds run outside it, so nested builds never
+        # deadlock), scratch/staging dirs are uuid-unique per call, and
+        # the composition/fixture contract (only _FAMILY_WARMUP names,
+        # only _WARMUP_SF_DIR) is unchanged and still test-pinned.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=len(warm_names)) as pool:

@@ -14,8 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..registry import query
-from ..tables import parallel_table, table
-from .iterative import memo_put, parquet_barrier, scratch_dir
+from ..tables import get_or_build, parallel_table, table
+from .iterative import parquet_barrier, scratch_dir
 
 # The fixture corpus has no exact duplicate texts (FIXTURES.md, verified);
 # C1 injects copies of every 10th doc so the detector has real work.
@@ -81,20 +81,11 @@ _JACCARD_TAU = 0.8
 _AUTO_DF_VOCAB_MAX = 50_000_000
 
 
-# order="auto" probe decisions memoized per (corpus, tokenization) key for
-# the life of the process (VERDICT r5 wrong-item 4): the probe is bounded
-# (a scan-stage aggregate + optional HLL) but it is per-QUERY driver
-# latency, and the decision is a property of the corpus+tokenizer, not of
-# the calling query — a pipeline re-running dedup rungs over one corpus
-# should pay it once. Callers pass ``cache_key`` only when the docs frame
-# is a pure function of (sf_dir, tokenization); ad-hoc frames skip caching.
-_PREFIX_ORDER_CACHE: dict[tuple[str, int], str] = {}
-
-
 def pick_prefix_order(
     docs,
     auto_vocab_max: int = _AUTO_DF_VOCAB_MAX,
-    cache_key: str | None = None,
+    sf_dir: str | None = None,
+    tokens: str | None = None,
 ) -> str:
     """The order="auto" rule, two-tier so the probe itself never dominates:
 
@@ -109,25 +100,30 @@ def pick_prefix_order(
        single-row shuffle — still strictly cheaper than the df pass it
        gates) to check whether the DISTINCT count also exceeds it.
 
-    Returns ``"df"`` iff the vocabulary fits the df-table budget."""
-    memo = (cache_key, auto_vocab_max) if cache_key is not None else None
-    if memo is not None and memo in _PREFIX_ORDER_CACHE:
-        return _PREFIX_ORDER_CACHE[memo]
-    occurrences = docs.agg(
-        F.sum(F.size("tokset")).cast("bigint").alias("n")
-    ).first()["n"]
-    if occurrences is not None and occurrences <= auto_vocab_max:
-        order = "df"
-    else:
+    Returns ``"df"`` iff the vocabulary fits the df-table budget.
+
+    The decision is a property of the corpus and its tokenization, not of
+    the calling query: when ``docs`` is a pure function of ``sf_dir`` under
+    the tokenization named ``tokens``, pass both and the probe runs once
+    per corpus in the family-state store. Ad-hoc frames pass neither."""
+
+    def probe():
+        occurrences = docs.agg(
+            F.sum(F.size("tokset")).cast("bigint").alias("n")
+        ).first()["n"]
+        if occurrences is not None and occurrences <= auto_vocab_max:
+            return "df"
         vocab = (
             docs.select(F.explode("tokset").alias("t"))
             .agg(F.approx_count_distinct("t", rsd=0.05).alias("v"))
             .first()["v"]
         )
-        order = "df" if vocab <= auto_vocab_max else "hash"
-    if memo is not None:
-        _PREFIX_ORDER_CACHE[memo] = order
-    return order
+        return "df" if vocab <= auto_vocab_max else "hash"
+
+    if sf_dir is None:
+        return probe()
+    family = ("prefix_order", tokens, auto_vocab_max)
+    return get_or_build(docs.sparkSession, family, sf_dir, probe)
 
 
 def prefix_filtered_jaccard(
@@ -137,7 +133,7 @@ def prefix_filtered_jaccard(
     reuse: bool = False,
     hash_tokens: bool = False,
     auto_vocab_max: int = _AUTO_DF_VOCAB_MAX,
-    order_cache_key: str | None = None,
+    order_memo: tuple[str, str] | None = None,
     return_scored: bool = False,
 ):
     """Exact set-similarity self-join (Jaccard >= tau) via PPJoin-style
@@ -170,6 +166,8 @@ def prefix_filtered_jaccard(
       while the vocab — hence the df table — is small; hash wins when the
       vocab dwarfs executor memory) as an executable rule instead of a
       per-call literal. Exactness is unaffected — both orders are exact.
+      ``order_memo=(sf_dir, tokenization)`` stores the decision per
+      corpus (see :func:`pick_prefix_order`).
 
     ``reuse=True`` materializes the build twice, with a MEASURED split
     between the two barrier kinds (round 11): the tokenized docs and the
@@ -204,7 +202,7 @@ def prefix_filtered_jaccard(
     if reuse:
         docs = docs.localCheckpoint(eager=True)
     if order == "auto":
-        order = pick_prefix_order(docs, auto_vocab_max, order_cache_key)
+        order = pick_prefix_order(docs, auto_vocab_max, *(order_memo or ()))
     plen = (F.col("sz") - F.ceil(F.lit(tau) * F.col("sz")) + 1).cast("int")
     if order == "hash":
         ordered = F.array_sort(
@@ -349,38 +347,31 @@ def prefix_filtered_jaccard(
 
 
 
-# C2/C116/C118 shared state: the verified (doc_a, doc_b, sa, sb, i) pair
-# frame over `documents` at tau=_JACCARD_TAU, memoized per (session,
-# corpus) like the containment state below — a pipeline running the exact
-# pass, the yield curve and the centrality score over one corpus pays the
-# PPJoin candidate generation + array verify ONCE (the frame is already
-# parquet-barriered inside prefix_filtered_jaccard under reuse=True).
-_JACCARD_SCORED_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _jaccard_scored(spark, sf_dir):
-    import os as _os
+    """C2/C116/C118 shared state: the verified (doc_a, doc_b, sa, sb, i)
+    pair frame over `documents` at tau=_JACCARD_TAU, one per corpus in the
+    family-state store — the exact pass, the yield curve and the
+    centrality score pay the PPJoin candidate generation + array verify
+    once (the frame is parquet-barriered inside prefix_filtered_jaccard
+    under reuse=True)."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _JACCARD_SCORED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = parallel_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.array_distinct(F.split("text", " ")).alias("tokset"),
-    )
-    # hash_tokens=True (round 13, VERDICT r12 item #2): the verify stage's
-    # array_intersect dominates this build, and fixed-width BIGINTs cut it
-    # ~40% measured at sf0.1 (11.8s -> 7.2s cold) with bit-identical
-    # output (758,890 scored rows either way — set sizes, intersections
-    # and hence every downstream jaccard are unchanged unless two distinct
-    # WORDS of one candidate pair collide in 64 bits, ~|vocab|²/2⁶⁴).
-    scored = prefix_filtered_jaccard(
-        docs, _JACCARD_TAU, reuse=True, return_scored=True, hash_tokens=True
-    )
-    memo_put(_JACCARD_SCORED_CACHE, key, scored)
-    return scored
+    def build():
+        docs = parallel_table(spark, sf_dir, "documents").select(
+            "doc_id",
+            "lang",
+            F.array_distinct(F.split("text", " ")).alias("tokset"),
+        )
+        # hash_tokens=True: the verify stage's array_intersect dominates
+        # this build, and fixed-width BIGINTs cut it ~40% measured at
+        # sf0.1 (11.8s -> 7.2s cold) with bit-identical output (758,890
+        # scored rows either way — set sizes, intersections and hence
+        # every downstream jaccard are unchanged unless two distinct WORDS
+        # of one candidate pair collide in 64 bits, ~|vocab|²/2⁶⁴).
+        return prefix_filtered_jaccard(
+            docs, _JACCARD_TAU, reuse=True, return_scored=True, hash_tokens=True
+        )
+
+    return get_or_build(spark, "jaccard_scored", sf_dir, build)
 
 
 @query(
@@ -471,44 +462,34 @@ def portable_minhash_signatures(toks):
     )
 
 
-# C3/C126/C140/C143 shared state: the portable-permutation signature frame
-# (doc_id, h0..h{k-1}) over documents' distinct word tokens, memoized per
-# (session, corpus) like the PPJoin/containment states above (VERDICT r12
-# item #2: the three rows-only→SQL promotions each recomputed the same 24
-# md5-parse + affine-min aggregates — the single heaviest shared expression
-# in the suite). Parquet-barriered: 25 BIGINTs per doc, restart-safe, and
-# the barrier scan hands AQE true size statistics for the band joins.
-_PORTABLE_SIG_CACHE: dict[tuple[str, str], object] = {}
-
-
 def portable_doc_signatures(spark, sf_dir):
-    """Memoized portable MinHash signatures over `documents` word tokens —
-    the one signature-family build C3 (banding), C126 (ingest probe), C140
+    """Portable MinHash signatures (doc_id, h0..h{k-1}) over `documents`
+    word tokens, one per corpus in the family-state store — the one
+    signature-family build C3 (banding), C126 (ingest probe), C140
     (estimator audit, first {_MINHASH_K - 8} columns) and C143 (band
-    assignment) all ride. At 100 TB this is a persistent signature table
-    the pipeline maintains incrementally beside the corpus."""
-    import os as _os
+    assignment) all ride, so the 24 md5-parse + affine-min aggregates run
+    once. Parquet-barriered: 25 BIGINTs per doc, restart-safe, and the
+    barrier scan hands AQE true size statistics for the band joins. At
+    100 TB this is a persistent signature table the pipeline maintains
+    incrementally beside the corpus."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _PORTABLE_SIG_CACHE.get(key)
-    if hit is not None:
-        return hit
-    toks = (
-        parallel_table(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
+    def build():
+        toks = (
+            parallel_table(spark, sf_dir, "documents")
+            .select(
+                "doc_id",
+                F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
+            )
+            .where(F.col("tok") != "")
         )
-        .where(F.col("tok") != "")
-    )
-    sigs = parquet_barrier(
-        spark,
-        portable_minhash_signatures(toks),
-        scratch_dir(spark, "portable_sigs"),
-        "sigs",  # consumed by C3 bands + agreement joins, C126, C140, C143
-    )
-    memo_put(_PORTABLE_SIG_CACHE, key, sigs)
-    return sigs
+        return parquet_barrier(
+            spark,
+            portable_minhash_signatures(toks),
+            scratch_dir(spark, "portable_sigs"),
+            "sigs",  # consumed by C3 bands + agreement joins, C126, C140, C143
+        )
+
+    return get_or_build(spark, "portable_signatures", sf_dir, build)
 
 
 def minhash_band_pairs(sigs, checkpoint: bool = True):
@@ -838,27 +819,18 @@ def _containment_candidates(spark, indexed, tau):
     )
 
 
-# C82/C82s shared state memoized per (session, corpus) for the life of
-# the process — the C21 labels-cache precedent: a pipeline running both
-# the exact pass and its sketch rung over one corpus materializes the
-# token sets and the inverted index ONCE. The candidate join itself stays
-# lazy (see _containment_candidates). Keyed by applicationId so a cached
-# frame can never outlive its session.
-_CONTAINMENT_STATE: dict[tuple[str, str], tuple] = {}
-
-
 def _containment_state(spark, sf_dir):
-    import os as _os
+    """C82/C82s shared state, one per corpus in the family-state store:
+    the exact pass and its sketch rung share one materialization of the
+    token sets and the inverted index. The candidate join itself stays
+    lazy (see _containment_candidates)."""
 
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _CONTAINMENT_STATE.get(key)
-    if hit is not None:
-        return hit
-    stage = scratch_dir(spark, "containment_state")
-    docs = _containment_docs(spark, sf_dir, stage)
-    indexed = _containment_index(spark, docs, stage)
-    memo_put(_CONTAINMENT_STATE, key, (docs, indexed))
-    return docs, indexed
+    def build():
+        stage = scratch_dir(spark, "containment_state")
+        docs = _containment_docs(spark, sf_dir, stage)
+        return docs, _containment_index(spark, docs, stage)
+
+    return get_or_build(spark, "containment_state", sf_dir, build)
 
 
 @query(

@@ -35,19 +35,6 @@ def scratch_dir(spark, prefix: str) -> str:
     return stage
 
 
-def memo_put(cache: dict, key, val, cap: int = 64):
-    """Bounded check-then-set for the per-(applicationId, corpus) family
-    memos (ADVICE r14): the dicts are keyed by applicationId, so entries
-    for dead sessions accumulate across long multi-session processes
-    (pytest) and pin checkpointed JVM state. A small cap with clear() on
-    overflow bounds that — the entries are rebuildable memos, so a rare
-    clear costs one re-build, never correctness."""
-    if len(cache) > cap:
-        cache.clear()
-    cache[key] = val
-    return val
-
-
 def parquet_barrier(spark, df, stage: str, name: str):
     """Materialize ``df`` to ``stage/name`` parquet and return the
     re-read frame — the restart-safe sibling of ``localCheckpoint``:

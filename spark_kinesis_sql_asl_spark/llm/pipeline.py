@@ -21,10 +21,10 @@ from pyspark.sql import Observation, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import parallel_table, table
+from ..tables import get_or_build, parallel_table, table
 from .curation import _NTOK_DUCK, _NTOK_SPARK
 from .dedup import prefix_filtered_jaccard
-from .iterative import memo_put, scratch_dir
+from .iterative import parquet_barrier, scratch_dir
 from .similarity import (
     _N_QUERIES,
     _TOPK,
@@ -40,11 +40,6 @@ from .similarity import (
 _SIMHASH_BITS = 32
 _SIMHASH_BANDS = 4  # 8-bit bands; candidates must agree on >=1 full band
 _SIMHASH_MAX_HAMMING = 4
-
-# (applicationId, sf_dir) -> staged fingerprint parquet path (the C21
-# shared-state pattern: first SimHash-family consumer pays the build, the
-# rest re-read the scratch parquet).
-_SIMHASH_FP_CACHE: dict[tuple[str, str], tuple] = {}
 
 # 60-bit integer from the md5 hex prefix — identical in Spark and DuckDB.
 _SPARK_TOKHASH = "cast(conv(substring(md5(tok), 1, 15), 16, 10) as bigint)"
@@ -109,16 +104,22 @@ def simhash_fingerprints(spark, sf_dir, checkpoint=True):
     ``sum(+/-1) > 0``). NULL-text docs are filtered to match the oracle,
     where ``unnest(NULL)`` emits no rows. ``checkpoint`` barriers the
     3-column table before self-joins that would otherwise recompute the
-    md5 + 32-bit fold per side (measured ~2x whole-query cost); since
-    round 10 the barrier is a memoized parquet scratch write (VERDICT r9
-    #4 — restart-safe on a 1000-executor run, and the whole SimHash
-    family now shares ONE fingerprint build per (session, sf) instead of
-    re-checkpointing per query)."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    md5 + 32-bit fold per side (measured ~2x whole-query cost); the
+    barrier is a parquet scratch write (restart-safe on a 1000-executor
+    run) held in the family-state store, so the whole SimHash family
+    shares ONE fingerprint build per corpus."""
     if checkpoint:
-        cached = _SIMHASH_FP_CACHE.get(key)
-        if cached is not None and os.path.isdir(cached[0]):
-            return spark.read.schema(cached[1]).parquet(cached[0])
+        return get_or_build(
+            spark,
+            "simhash_fingerprints",
+            sf_dir,
+            lambda: parquet_barrier(
+                spark,
+                simhash_fingerprints(spark, sf_dir, checkpoint=False),
+                scratch_dir(spark, "simhash_fp"),
+                "fp",
+            ),
+        )
     d = parallel_table(spark, sf_dir, "documents").where(
         F.col("text").isNotNull()
     )
@@ -138,14 +139,7 @@ def simhash_fingerprints(spark, sf_dir, checkpoint=True):
     sh = d.select("doc_id", "lang", tok_hashes.alias("hs")).select(
         "doc_id", "lang", simhash.alias("simhash")
     )
-    if not checkpoint:
-        return sh
-    path = os.path.join(scratch_dir(spark, "simhash_fp"), "fp")
-    sh.write.parquet(path)
-    # Cache (path, schema): the memo-hit read is then pure metadata — no
-    # footer-inference job (round 14).
-    memo_put(_SIMHASH_FP_CACHE, key, (path, sh.schema))
-    return spark.read.schema(sh.schema).parquet(path)
+    return sh
 
 
 def simhash_bands(sh):
@@ -278,9 +272,8 @@ def q_llm_dedup_ngram(spark, sf_dir):
         order="auto",
         reuse=True,
         hash_tokens=True,
-        # the probe decision is a property of (corpus, char-5-gram): pay it
-        # once per process, not once per query run (VERDICT r5 item 4)
-        order_cache_key=f"{sf_dir}:char{_NGRAM_N}gram",
+        # the probe decision is a property of (corpus, char-5-gram)
+        order_memo=(sf_dir, f"char{_NGRAM_N}gram"),
     )
 
 
@@ -747,10 +740,6 @@ def q_llm_sim_ivf(spark, sf_dir):
 
 _CC_MAX_ITERS = 20
 
-# sf_dir -> staged final-label parquet path (process-lifetime memo; the
-# staging dirs live until interpreter exit or the cluster's scratch policy)
-_CC_LABELS_CACHE: dict[str, tuple] = {}
-
 
 def min_label_components(spark, pairs, prefix="spark_cc_rounds", shortcut=False):
     """Connected components over an undirected pair list (doc_a, doc_b)
@@ -978,23 +967,16 @@ def q_llm_dedup_cluster(spark, sf_dir):
     (1) or (2). Scratch rounds are deleted eagerly at exit; only the final
     round's parquet must outlive this call.
 
-    The final label table is memoized per sf_dir for the life of the
-    process: downstream composites (C38 survivors) and repeat calls read
-    the staged parquet instead of re-running pair generation + CC — the
-    single-job analog of a pipeline materializing its dedup labels once."""
-    key = os.path.abspath(sf_dir)
-    cached = _CC_LABELS_CACHE.get(key)
-    if cached is not None and os.path.isdir(cached[0]):
-        labels = spark.read.schema(cached[1]).parquet(cached[0])
-        w = Window.partitionBy("cluster_id")
-        return labels.select(
-            "doc_id",
-            "cluster_id",
-            F.count(F.lit(1)).over(w).alias("cluster_size"),
-        )
-    pairs = q_llm_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
-    labels, out_final = min_label_components(spark, pairs)
-    _CC_LABELS_CACHE[key] = (out_final, labels.schema)
+    The final label table is held per corpus in the family-state store:
+    downstream composites (C38 survivors) and repeat calls read the staged
+    parquet instead of re-running pair generation + CC — the single-job
+    analog of a pipeline materializing its dedup labels once."""
+
+    def build():
+        pairs = q_llm_dedup_simhash(spark, sf_dir).select("doc_a", "doc_b")
+        return min_label_components(spark, pairs)[0]
+
+    labels = get_or_build(spark, "simhash_cc_labels", sf_dir, build)
     w = Window.partitionBy("cluster_id")
     return labels.select(
         "doc_id", "cluster_id", F.count(F.lit(1)).over(w).alias("cluster_size")

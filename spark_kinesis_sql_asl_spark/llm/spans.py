@@ -17,8 +17,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import parallel_table, table
-from .iterative import memo_put, parquet_barrier, scratch_dir
+from ..tables import get_or_build, parallel_table, table
+from .iterative import parquet_barrier, scratch_dir
 
 _SPAN_W = 32  # chunk width (chars), non-overlapping
 _SPAN_TOP_K = 50
@@ -999,25 +999,23 @@ def _ssd_spans(m):
     )
 
 
-# C110/C111 shared state: the qualifying-span frame memoized per
-# (session, corpus) -- the C82/C2 precedent. The spans frame is tiny
-# (one row per >=40-token overlap), so the eager localCheckpoint costs
-# little and spares the second consumer the shingle rollup + pair join.
-_SSD_SPANS_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ssd_spans_cached(spark, sf_dir):
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.abspath(sf_dir))
-    hit = _SSD_SPANS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    spans = _ssd_spans(
-        _ssd_kept_shingles_cached(spark, sf_dir)
-    ).localCheckpoint(eager=True)
-    memo_put(_SSD_SPANS_CACHE, key, spans)
-    return spans
+    """C110/C111 shared state: the qualifying-span frame, held per corpus
+    in the family-state store so the second consumer skips the shingle
+    rollup + pair join. Long-lived family state, so it goes through the
+    parquet barrier (restart-safe); the frame is one row per >=40-token
+    overlap, cheap to write."""
+    return get_or_build(
+        spark,
+        "substring_spans",
+        sf_dir,
+        lambda: parquet_barrier(
+            spark,
+            _ssd_spans(_ssd_kept_shingles_cached(spark, sf_dir)),
+            scratch_dir(spark, "spark_ssd_spans"),
+            "spans",
+        ),
+    )
 
 
 
@@ -1450,31 +1448,24 @@ def _ssd_kept_shingles(corpus):
     return sh.join(keep, "h")
 
 
-# C110/C110s shared state: the kept-shingle frame memoized per
-# (session, corpus) — one shingle fold + df rollup per session feeds the
-# exact operator's span build AND the winnowed rung (the _SSD_SPANS_CACHE
-# precedent, one level lower in the ladder).
-_SSD_SHINGLES_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ssd_kept_shingles_cached(spark, sf_dir):
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _SSD_SHINGLES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    # Parquet barrier, not localCheckpoint (ADVICE r14): this is the
-    # long-lived shared family state both C110 and the winnowed rung ride
-    # — checkpoint blocks die with their executor and are unrecoverable,
-    # contradicting the reliable-store discipline the un-kept shingle
-    # frame one call below already paid for. The kept frame is (doc_id,
-    # pos, h) — 24 B/row, the cheap barrier class.
-    m = parquet_barrier(
+    """C110/C110s shared state: the kept-shingle frame (doc_id, pos, h),
+    held per corpus in the family-state store — one shingle fold + df
+    rollup feeds the exact operator's span build AND the winnowed rung.
+    Long-lived family state, so it goes through the parquet barrier
+    (restart-safe, 24 B/row), like the un-kept shingle frame inside
+    :func:`_ssd_kept_shingles`."""
+    return get_or_build(
         spark,
-        _ssd_kept_shingles(_ssd_corpus(spark, sf_dir)),
-        scratch_dir(spark, "spark_ssd_kept"),
-        "kept",
+        "substring_kept_shingles",
+        sf_dir,
+        lambda: parquet_barrier(
+            spark,
+            _ssd_kept_shingles(_ssd_corpus(spark, sf_dir)),
+            scratch_dir(spark, "spark_ssd_kept"),
+            "kept",
+        ),
     )
-    return memo_put(_SSD_SHINGLES_CACHE, key, m)
 
 
 def winnow_fingerprints(m, w: int = _C110S_W):
@@ -1607,7 +1598,7 @@ def q_llm_substring_sketch(spark, sf_dir):
     family deploys at scale; at 100 TB only fingerprints shuffle in
     stage 1 (8-byte hashes), and stage 2's pair-restricted rebuild
     touches the candidate docs, not the corpus."""
-    m = _ssd_kept_shingles_cached(spark, sf_dir)  # memoized + checkpointed
+    m = _ssd_kept_shingles_cached(spark, sf_dir)  # stored + parquet-barriered
     fp = winnow_fingerprints(m)
     fa = fp.alias("fa")
     fb = fp.alias("fb")

@@ -13,15 +13,13 @@ engines and partitionings (the driver-canon rule).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..tables import parallel_table, table
+from ..tables import get_or_build, parallel_table, table
 from .curation import _KMEANS_K, _Q_VEC_SQL_DUCK, _Q_VEC_SQL_SPARK
-from .iterative import memo_put, parquet_barrier, scratch_dir
+from .iterative import parquet_barrier, scratch_dir
 
 # Shared DuckDB CTE: quantize + seed + assign (identical to C33's oracle,
 # re-stated here so each oracle stays self-contained for the driver).
@@ -273,66 +271,52 @@ def lloyd_estep(e, cents):
     )
 
 
-# Trained centroids memo (round 8): q_llm_kmeans_train, the trained-IVF
-# recall gate AND the C125/C127 SemDeDup state all start from the same
-# 3-round training — pay it once per (applicationId, sf_dir). The memo
-# holds the parquet-backed final-round frame, so consumers re-read files,
-# never recompute the loop.
-_TRAINED_CENTROIDS: dict[tuple[str, str, int], object] = {}
-
-
 def train_centroids(spark, sf_dir, rounds=_TRAIN_ROUNDS, k=_KMEANS_K):
     """Run ``rounds`` Lloyd iterations from the C33 seeds (first ``k``
     vec_ids) and return the trained centroid table (cell_id, cv
     array<bigint>), each round's centroids materialized to parquet (flat
     lineage, replayable state). Shared by q_llm_kmeans_train, the
     trained-IVF recall gate in tests/test_llm.py, and the C125/C127
-    semantic-dedup state; memoized per (applicationId, sf_dir, rounds, k).
+    semantic-dedup state, so it is held per (corpus, rounds, k) in the
+    family-state store: consumers re-read the final round's parquet, never
+    recompute the loop.
 
     ``k`` defaults to the oracle-pinned {_KMEANS_K}; the semantic family
     reads it from ``spark.kinesislike.semantic.cells`` (see
     :func:`_semantic_k`) so a 100 TB deployment can keep CELL SIZE, not
     cell count, constant — the scaling-decade gate runs exactly that
     configuration."""
-    memo_key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        rounds,
-        k,
-    )
-    hit = _TRAINED_CENTROIDS.get(memo_key)
-    if hit is not None:
-        return hit
-    e = parallel_table(spark, sf_dir, "embeddings", key="vec_id").select(
-        "vec_id", F.expr(_Q_VEC_SQL_SPARK).alias("qv")
-    )
-    cents = e.where(F.col("vec_id") < k).select(
-        F.col("vec_id").alias("cell_id"), F.col("qv").alias("cv")
-    )
-    stage = scratch_dir(spark, "spark_kmeans_rounds")
-    for r in range(1, rounds + 1):
-        new_cents = (
-            lloyd_estep(e, cents)
-            .select("cell_id", F.posexplode("qv").alias("dim", "qval"))
-            .groupBy("cell_id", "dim")
-            .agg(
-                F.expr("CAST(sum(qval) div count(1) AS BIGINT)").alias(
-                    "centroid"
+
+    def build():
+        e = parallel_table(spark, sf_dir, "embeddings", key="vec_id").select(
+            "vec_id", F.expr(_Q_VEC_SQL_SPARK).alias("qv")
+        )
+        cents = e.where(F.col("vec_id") < k).select(
+            F.col("vec_id").alias("cell_id"), F.col("qv").alias("cv")
+        )
+        stage = scratch_dir(spark, "spark_kmeans_rounds")
+        for r in range(1, rounds + 1):
+            new_cents = (
+                lloyd_estep(e, cents)
+                .select("cell_id", F.posexplode("qv").alias("dim", "qval"))
+                .groupBy("cell_id", "dim")
+                .agg(
+                    F.expr("CAST(sum(qval) div count(1) AS BIGINT)").alias(
+                        "centroid"
+                    )
+                )
+                .groupBy("cell_id")
+                .agg(
+                    F.expr(
+                        "transform(array_sort(collect_list(struct(dim, centroid))),"
+                        " s -> s.centroid)"
+                    ).alias("cv")
                 )
             )
-            .groupBy("cell_id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, centroid))),"
-                    " s -> s.centroid)"
-                ).alias("cv")
-            )
-        )
-        path = os.path.join(stage, f"cents_{r}")
-        new_cents.write.parquet(path)
-        cents = spark.read.schema(new_cents.schema).parquet(path)
-    _TRAINED_CENTROIDS[memo_key] = cents
-    return cents
+            cents = parquet_barrier(spark, new_cents, stage, f"cents_{r}")
+        return cents
+
+    return get_or_build(spark, ("centroids", rounds, k), sf_dir, build)
 
 
 @query(
@@ -869,12 +853,6 @@ _SEMDEDUP_TAU_DEN_SQ = 100
 # modest, which the C127 audit makes visible rather than hiding.
 _SEMDEDUP_NPROBE = 3
 
-# Trained assignments shared by C125, C127 and the recall gates: built once
-# per (applicationId, sf_dir), localCheckpointed. Value = (primary, probes):
-# primary = (vec_id, cell_id, dist, nrm2) at rn=1; probes = (vec_id,
-# cell_id) at rn <= _SEMDEDUP_NPROBE.
-_SEMANTIC_STATE: dict[tuple[str, str, int], tuple] = {}
-
 # Shared DuckDB CTE chain for the SemDeDup family (C125/C129/C130): train
 # (the C77 unrolled chain), rank cells per vector, multi-probe, candidate
 # pairs, norms, scored pairs, thresholded semantic-dup pairs. Each oracle
@@ -951,14 +929,24 @@ def _semantic_k(spark) -> int:
 
 
 def _semantic_state(spark, sf_dir):
-    """Build-or-ride the memoized trained-cell assignment state — C77's
-    3-round Lloyd centroids reused as SemDeDup's blocking structure (the
-    r6/r7 shared-state pattern: first consumer pays, the rest ride)."""
+    """The trained-cell assignment state (primary, probes, sem_pairs) that
+    C125, C127 and the recall gates share — C77's 3-round Lloyd centroids
+    reused as SemDeDup's blocking structure, held per (corpus, k) in the
+    family-state store: the first consumer pays, the rest ride.
+
+    primary = (vec_id, cell_id, qv, dist, nrm2) at rn=1; probes =
+    (vec_id, cell_id) at rn <= _SEMDEDUP_NPROBE; sem_pairs = the
+    thresholded semantic-dup pairs (vec_a, vec_b, dot_q, cos2_ppm)."""
     k = _semantic_k(spark)
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), k)
-    hit = _SEMANTIC_STATE.get(key)
-    if hit is not None:
-        return hit
+    return get_or_build(
+        spark,
+        ("semantic_state", k),
+        sf_dir,
+        lambda: _build_semantic_state(spark, sf_dir, k),
+    )
+
+
+def _build_semantic_state(spark, sf_dir, k):
     stage = scratch_dir(spark, "semantic_state")
     cents = train_centroids(spark, sf_dir, k=k)
     e = parallel_table(spark, sf_dir, "embeddings", key="vec_id").select(
@@ -976,12 +964,11 @@ def _semantic_state(spark, sf_dir):
     )
     w = Window.partitionBy("vec_id").orderBy("dist", "cell_id")
     ranked = dists.withColumn("rn", F.row_number().over(w))
-    # Parquet barriers, not localCheckpoint (round-10 migration, VERDICT
-    # r9 #4): primary/probes/sem_pairs each feed 2+ downstream queries
-    # and both sides of the candidate join — on a 1000-executor run a
-    # lost executor re-reads the file instead of invalidating the whole
-    # memoized family state (localCheckpoint blocks are unrecoverable
-    # once their executor dies).
+    # Parquet barriers, not localCheckpoint: primary/probes/sem_pairs each
+    # feed 2+ downstream queries and both sides of the candidate join — on
+    # a 1000-executor run a lost executor re-reads the file instead of
+    # invalidating the whole stored family state (localCheckpoint blocks
+    # are unrecoverable once their executor dies).
     primary = parquet_barrier(
         spark,
         ranked.where(F.col("rn") == 1)
@@ -1054,9 +1041,7 @@ def _semantic_state(spark, sf_dir):
         stage,
         "sem_pairs",
     )
-    state = (primary, probes, sem_pairs)
-    memo_put(_SEMANTIC_STATE, key, state)
-    return state
+    return primary, probes, sem_pairs
 
 
 def semantic_pairs(spark, sf_dir):
@@ -1111,8 +1096,8 @@ def q_llm_dedup_semantic(spark, sf_dir):
     never N^2 — with AQE skew-split handling any fat cell. The
     sub-quadratic scaling entry lives in tests/test_scaling.py; the
     C127 audit prices the blocked volume BEFORE this join runs. Pair
-    state is memoized per (session, sf): C129's survivor ledger and
-    C130's yield curve ride the same checkpoint."""
+    state is held per corpus in the family-state store: C129's survivor
+    ledger and C130's yield curve ride the same barrier."""
     return semantic_pairs(spark, sf_dir)
 
 
@@ -1329,31 +1314,22 @@ def q_llm_semantic_yield(spark, sf_dir):
     ).drop("n_vecs")
 
 
-_SEM_CC_LABELS: dict[tuple, tuple] = {}
-
-
 def semantic_cc_labels(spark, sf_dir):
-    """Memoized min-label CC over the C125 semantic pair graph — built
-    once per (session, sf) and shared by C131 (cluster histogram) and
-    C170 (tightness audit). Round 14: the two queries each ran their own
-    IDENTICAL label loop over the same memoized pair state (~8 barrier
-    jobs apiece); one loop now serves both — the same family-state
-    discipline as the C21 simhash labels and the C125 pair memo (the
-    build is booked to whichever family member runs first)."""
+    """Min-label CC over the C125 semantic pair graph, held per corpus in
+    the family-state store and shared by C131 (cluster histogram) and
+    C170 (tightness audit): one label loop (~8 barrier jobs) serves both,
+    booked to whichever family member runs first."""
     from .pipeline import min_label_components
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    hit = _SEM_CC_LABELS.get(key)
-    if hit is not None and os.path.isdir(hit[0]):
-        return spark.read.schema(hit[1]).parquet(hit[0])
-    pairs = semantic_pairs(spark, sf_dir).select(
-        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-    )
-    labels, path = min_label_components(
-        spark, pairs, prefix="spark_semcc_rounds"
-    )
-    _SEM_CC_LABELS[key] = (path, labels.schema)
-    return labels
+    def build():
+        pairs = semantic_pairs(spark, sf_dir).select(
+            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+        )
+        return min_label_components(
+            spark, pairs, prefix="spark_semcc_rounds"
+        )[0]
+
+    return get_or_build(spark, "semantic_cc_labels", sf_dir, build)
 
 
 @query(

@@ -787,6 +787,12 @@ def q_skew_audit(spark, sf_dir):
     )
 
 
+# monotonically_increasing_id()'s stride between partitions: ids are
+# (partition_id << 33) + row_index, so global_rank's per-partition index is
+# exact only below this many rows per range partition.
+_RANK_PARTITION_ROWS = 1 << 33
+
+
 def global_rank(df, sort_cols, out_name="_rank", with_total=False):
     """Exact 1-based gap-free global rank over a TOTAL order with NO
     single-partition window.
@@ -803,8 +809,9 @@ def global_rank(df, sort_cols, out_name="_rank", with_total=False):
     RangePartitioning does not satisfy, so EVERY caller paid a second
     data-scale hashpartitioning(_pid) exchange right after the range
     exchange; measured plan diff on q_customer_rfm: 30 → 21 Exchanges).
-    Rows per partition are bounded by 2^33 — at larger scale raise the
-    range partition count, exactly the knob this helper already rides.
+    Rows per partition are bounded by 2^33 (the rank fails loudly past
+    it) — at larger scale raise the range partition count, exactly the
+    knob this helper already rides.
     (3) per-partition row counts (a ≤#partitions-row aggregate) turned
     into rank offsets via a broadcast triangular self-join (no window at
     all, so the plan carries zero partitionless WindowExec).
@@ -842,7 +849,7 @@ def global_rank(df, sort_cols, out_name="_rank", with_total=False):
         .withColumn("_mid", F.monotonically_increasing_id())
         .withColumn(
             "_rn",
-            F.expr("_mid - (CAST(_pid AS BIGINT) * 8589934592) + 1"),
+            F.expr(f"_mid - (CAST(_pid AS BIGINT) * {_RANK_PARTITION_ROWS}) + 1"),
         )
         .drop("_mid")
     )
@@ -854,10 +861,26 @@ def global_rank(df, sort_cols, out_name="_rank", with_total=False):
     # only, not the per-partition sort.
     counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     a, b = counts.alias("a"), counts.alias("b")
+    # The partition-size guard rides `_off`, which the rank reads: a check
+    # in a column nothing reads would be pruned away.
     offs = (
         a.join(F.broadcast(b), F.col("b._pid") < F.col("a._pid"), "left")
         .groupBy(F.col("a._pid").alias("_pid"), F.col("a._cnt").alias("_cnt"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off"))
+        .agg(
+            F.when(
+                F.col("a._cnt") < _RANK_PARTITION_ROWS,
+                F.coalesce(F.sum("b._cnt"), F.lit(0)),
+            )
+            .otherwise(
+                F.raise_error(
+                    F.lit(
+                        "global_rank: a range partition holds at least "
+                        f"{_RANK_PARTITION_ROWS} rows"
+                    )
+                )
+            )
+            .alias("_off")
+        )
     )
     ranked = (
         rn.join(F.broadcast(offs.select("_pid", "_off")), "_pid")

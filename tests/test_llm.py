@@ -228,15 +228,17 @@ def test_cluster_staging_uses_configured_scratch_dir(spark, tmp_path):
     in a shared location when one is configured (checkpoint dir or
     spark.kinesislike.scratchDir) — on a real cluster a driver-local
     tempdir would break the executor-loss durability claim."""
+    import shutil
+
     from .conftest import SF_SMOKE
 
-    from spark_kinesis_sql_asl_spark.llm import pipeline
-
-    pipeline._CC_LABELS_CACHE.clear()  # force a fresh staging run
+    # a fresh copy of the corpus is a cold key in the family-state store,
+    # so the label loop runs (and stages) here
+    sf_dir = shutil.copytree(SF_SMOKE, tmp_path / "sf")
     scratch = str(tmp_path / "scratch")
     spark.conf.set("spark.kinesislike.scratchDir", scratch)
     try:
-        rows = QUERIES["q_llm_dedup_cluster"](spark, SF_SMOKE).collect()
+        rows = QUERIES["q_llm_dedup_cluster"](spark, str(sf_dir)).collect()
         assert len(rows) >= 0
         import os
 

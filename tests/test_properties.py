@@ -449,6 +449,23 @@ def test_global_rank_dense_under_default_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
+def test_global_rank_fails_loudly_past_partition_bound(spark, monkeypatch):
+    """global_rank's per-partition index is exact only below
+    _RANK_PARTITION_ROWS rows per range partition; past it the rank must
+    raise, not return wrong ranks. The bound is lowered to 4 so a
+    100-row frame crosses it."""
+    import pytest
+    from pyspark.errors import PySparkException
+
+    from spark_kinesis_sql_asl_spark.operators import analytics
+
+    monkeypatch.setattr(analytics, "_RANK_PARTITION_ROWS", 4)
+    df = spark.range(0, 100).coalesce(1)
+    r = analytics.global_rank(df, [F.col("id").asc()], "rk")
+    with pytest.raises(PySparkException, match="range partition holds"):
+        r.collect()
+
+
 def test_mmr_first_pick_is_relevance_argmax_and_picks_distinct(spark):
     """C87 laws: step 1 is the plain relevance argmax (no diversity term
     yet), all 5 picks are distinct, and every later step's mmr equals
