@@ -16,6 +16,9 @@ and (c) a DuckDB-oracled correctness contract re-exported through
 
 from __future__ import annotations
 
+# First, so that every Python worker that unpickles package code stops
+# re-reading unchanged zip archives before each task (see pyworker.py).
+from . import pyworker  # noqa: F401
 from .registry import all_oracles, all_queries
 from .session import get_session
 

@@ -32,7 +32,8 @@ reference checkout empty, rows cited by inventory id):
 
 Layout on disk (the "stream"): {path}/{stream}/shard-{k}/{chunk:08d}.parquet
 written by staging.write_staging — parquet chosen so records are typed and
-the executor-side read is a zero-copy Arrow scan.
+the executor-side read is an Arrow scan whose record batches go to the JVM
+as they are, with arrival instants labelled UTC.
 
 Scale note: parallelism == shard count, exactly like the real connector
 (one RDD partition per shard, SURVEY.md §4); at 1000 executors you raise
@@ -44,6 +45,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -53,14 +55,29 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from .envelope import KINESIS_SCHEMA_DDL
+from .staging import _ENVELOPE_FIELDS
 
 _SHARD_PREFIX = "shard-"
 _CHUNK_SUFFIX = ".parquet"
 
-# Declared envelope column order (must match KINESIS_SCHEMA_DDL); executor
-# reads yield tuples in THIS order regardless of chunk-file physical order.
+# Declared envelope column order (KINESIS_SCHEMA_DDL's). PySpark hands a
+# data source's Arrow batches to the JVM by column position and checks only
+# their names, so executor reads emit THIS order whatever a chunk file's
+# physical order is.
 _ENVELOPE_COLS = tuple(
     f.split()[0] for f in KINESIS_SCHEMA_DDL.split(", ")
+)
+
+
+def _utc(typ: pa.DataType) -> pa.DataType:
+    return pa.timestamp(typ.unit, tz="UTC") if pa.types.is_timestamp(typ) else typ
+
+
+# The staged chunks' types in the declared order. Staging writes naive
+# microseconds that mean UTC, so the reader labels them UTC: a labelled
+# instant reaches Spark as is, whatever the Python worker's local zone.
+_ENVELOPE_SCHEMA = pa.schema(
+    [(c, _utc(dict(_ENVELOPE_FIELDS)[c])) for c in _ENVELOPE_COLS]
 )
 
 
@@ -135,16 +152,18 @@ class ShardSlice(InputPartition):
 
 
 def _read_slice(part: ShardSlice):
-    """Executor-side record decode (A2/A6): Arrow scan of the chunk files.
-    Runs in a Python worker with no SparkSession — pyarrow only.
+    """Executor-side record decode (A2/A6): yields each chunk file's rows as
+    ``pyarrow.RecordBatch``es with ``_ENVELOPE_SCHEMA``'s column order and
+    types. Runs in a Python worker with no SparkSession.
 
-    A11 data-loss policy covers BOTH loss classes (round 12): a chunk
-    missing below the requested offset (aged out past retention) and a
-    chunk present but unreadable (truncated mid-write / bit rot — pyarrow
-    raises on the footer or page decode). failOnDataLoss=true raises a
-    [DATA_LOSS] error naming the chunk; =false skips it and reports the
-    counted gap on stderr, so a backfill can quantify what the lenient
-    read dropped."""
+    A chunk without an envelope column raises ``ValueError``; one whose
+    types do not cast to the envelope's fails in the cast, before the JVM
+    sees it. A11 data-loss policy covers both loss classes: a chunk missing
+    below the requested offset (aged out past retention) and a chunk
+    present but unreadable (truncated mid-write, bit rot: pyarrow raises on
+    the footer or page decode). failOnDataLoss=true raises a [DATA_LOSS]
+    error naming the chunk; =false skips it and reports the counted gap on
+    stderr, so a backfill can quantify what the lenient read dropped."""
     import sys
 
     import pyarrow.parquet as pq
@@ -171,18 +190,13 @@ def _read_slice(part: ShardSlice):
                 f"unreadable ({type(exc).__name__}: {exc}); corrupt or "
                 f"truncated chunk file {f}; set failOnDataLoss=false to skip"
             ) from exc
-        # Yield in the declared envelope order, NOT the chunk file's physical
-        # column order: three envelope columns share type STRING, so an
-        # externally-written chunk with reordered columns would silently
-        # misalign them instead of erroring.
         missing = [c for c in _ENVELOPE_COLS if c not in tbl.column_names]
         if missing:
             raise ValueError(
                 f"chunk {f} missing envelope columns {missing}; "
                 f"has {tbl.column_names}"
             )
-        for row in tbl.to_pylist():
-            yield tuple(row[c] for c in _ENVELOPE_COLS)
+        yield from tbl.select(_ENVELOPE_COLS).cast(_ENVELOPE_SCHEMA).to_batches()
     if skipped:
         print(
             f"[kinesislike] WARN data loss: skipped {len(skipped)} chunk(s) "

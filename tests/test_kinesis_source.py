@@ -2,8 +2,10 @@
 
 Covers: registration, batch + streaming reads, offset checkpointing across
 restarts (no loss / no dup), mid-stream shard discovery (resharding),
-LATEST initial position, data-loss policy, multi-stream union, and the
-session's streaming state-partition count (with the sink's files per epoch).
+LATEST initial position, data-loss policy, multi-stream union, the
+session's streaming state-partition count (with the sink's files per epoch),
+and the reader's Arrow batches: envelope column order and types, and arrival
+instants that do not depend on the Python worker's local zone.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ import datetime as dt
 import glob
 import json
 import os
+import subprocess
+import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -22,6 +26,8 @@ from spark_kinesis_sql_asl_spark.session import STATE_PARTITIONS_KEY
 from spark_kinesis_sql_asl_spark.sources.envelope import decode_json_payload
 from spark_kinesis_sql_asl_spark.sources.kinesis_source import (
     KinesisLikeDataSource,
+    ShardSlice,
+    _read_slice,
 )
 from spark_kinesis_sql_asl_spark.sources.sink import parquet_stream_writer
 from spark_kinesis_sql_asl_spark.sources.staging import (
@@ -662,3 +668,101 @@ def test_state_partitions_stay_frozen_across_reshard(registered, tmp_path):
     expected = _staged_totals(root)
     assert sum(n for n, _ in expected.values()) == 6_000
     _check_sink(out, frozen, expected)
+
+
+def _one_chunk(tmp_path, events_rows, n=50):
+    root = str(tmp_path / "staging")
+    write_staging(events_to_dicts(events_rows[:n]), root, n_shards=1, n_chunks=1)
+    return root, os.path.join(root, "events", "shard-0", "00000000.parquet")
+
+
+def test_reversed_chunk_columns_read_back_aligned(registered, events_rows, tmp_path):
+    """A chunk written with its columns in reverse physical order reads back
+    in the declared envelope order: three envelope columns are STRING, so a
+    positional read would swap them silently."""
+    spark = registered
+    root, chunk = _one_chunk(tmp_path, events_rows)
+    staged = pq.read_table(chunk)
+    pq.write_table(staged.select(staged.column_names[::-1]), chunk)
+    assert pq.read_table(chunk).column_names[0] == "approximateArrivalTimestamp"
+
+    df = spark.read.format("kinesislike").option("path", root).load()
+    envelope = df.columns[:-1] + ["unix_micros(approximateArrivalTimestamp)"]
+    got = sorted(tuple(r) for r in df.selectExpr(*envelope).collect())
+    cols = staged.to_pydict()
+    cols["approximateArrivalTimestamp"] = staged.column(
+        "approximateArrivalTimestamp").cast(pa.int64()).to_pylist()
+    want = sorted(zip(*(cols[c] for c in df.columns)))
+    assert got == want
+
+
+def test_chunk_missing_envelope_column_names_it(events_rows, tmp_path):
+    root, chunk = _one_chunk(tmp_path, events_rows)
+    pq.write_table(pq.read_table(chunk).drop(["sequenceNumber"]), chunk)
+    part = ShardSlice(root, "events", "shard-0", 0, 1, skip_missing=False)
+    with pytest.raises(ValueError, match=r"missing envelope columns \['sequenceNumber'\]"):
+        list(_read_slice(part))
+
+
+def test_chunk_of_wrong_type_fails_in_the_cast(events_rows, tmp_path):
+    """The reader casts each chunk to the envelope types, because PySpark
+    checks only the names of a data source's Arrow batches: a ``data``
+    column of doubles fails here, not in the JVM."""
+    root, chunk = _one_chunk(tmp_path, events_rows)
+    staged = pq.read_table(chunk)
+    pq.write_table(
+        staged.set_column(0, "data", pa.array([1.5] * staged.num_rows)), chunk)
+    part = ShardSlice(root, "events", "shard-0", 0, 1, skip_missing=False)
+    with pytest.raises(pa.ArrowNotImplementedError, match="binary"):
+        list(_read_slice(part))
+
+
+_ZONE_PROBE = r"""
+import datetime as dt, json, sys, time
+from spark_kinesis_sql_asl_spark.session import get_session
+from spark_kinesis_sql_asl_spark.sources.kinesis_source import register
+from spark_kinesis_sql_asl_spark.sources.staging import write_staging
+
+root, ckpt = sys.argv[1:]
+write_staging([{"user_id": 1, "payload": "{}",
+                "ts": dt.datetime(2026, 1, 1, 0, 0, 0, 462)}],
+              root, n_shards=1, n_chunks=1)
+spark = get_session("zone-probe")
+register(spark)
+micros = "unix_micros(approximateArrivalTimestamp)"
+batch = spark.read.format("kinesislike").option("path", root).load()
+q = (spark.readStream.format("kinesislike").option("path", root).load()
+     .writeStream.format("memory").queryName("zone_probe")
+     .option("checkpointLocation", ckpt).trigger(availableNow=True).start())
+q.awaitTermination(120)
+print(json.dumps({
+    "zone": time.strftime("%z"),
+    "batch": batch.selectExpr(micros).first()[0],
+    "stream": spark.table("zone_probe").selectExpr(micros).first()[0],
+}))
+spark.stop()
+"""
+
+
+def test_arrival_instants_ignore_worker_zone(tmp_path):
+    """A staged arrival timestamp is a UTC instant. Python workers inherit
+    the environment when the daemon starts, so the source runs in a fresh
+    application whose process has ``TZ=Asia/Tokyo``: both the batch read
+    and an ``availableNow`` stream must return the staged instant, not one
+    shifted by the worker's local offset (-9 h)."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(
+        os.environ, TZ="Asia/Tokyo", SPARK_GRAFT_CPUS="1",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(
+            p for p in (repo, os.environ.get("PYTHONPATH")) if p),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _ZONE_PROBE,
+         str(tmp_path / "staging"), str(tmp_path / "ckpt")],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"zone": "+0900", "batch": 1767225600000462,
+                   "stream": 1767225600000462}
