@@ -20,7 +20,6 @@ from ..tables import table
 
 @query(
     "q_fn_datetime",
-    priority=0,
     oracle="""
     SELECT o_orderkey,
            year(o_orderdate) AS y,
@@ -60,7 +59,6 @@ def q_fn_datetime(spark, sf_dir):
 
 @query(
     "q_fn_math",
-    priority=20,
     oracle="""
     SELECT l_orderkey, l_linenumber,
            round(l_extendedprice, 2) AS price_r2,
@@ -98,7 +96,6 @@ def q_fn_math(spark, sf_dir):
 
 @query(
     "q_fn_case",
-    priority=20,
     oracle="""
     SELECT event_id,
            CASE WHEN value > 75 THEN 'high'
@@ -126,7 +123,6 @@ def q_fn_case(spark, sf_dir):
 
 @query(
     "q_fn_cast",
-    priority=20,
     oracle="""
     SELECT o_orderkey,
            CAST(trunc(o_totalprice) AS BIGINT) AS price_int,
@@ -153,7 +149,6 @@ def q_fn_cast(spark, sf_dir):
 
 @query(
     "q_fn_bitwise",
-    priority=20,
     oracle="""
     SELECT o_orderkey,
            o_orderkey & 255 AS and_lo,

@@ -16,7 +16,6 @@ from ..tables import table
 
 @query(
     "q_fn_array",
-    priority=20,
     oracle="""
     SELECT doc_id,
            (toks)[1] AS first_token,
@@ -51,7 +50,6 @@ def q_fn_array(spark, sf_dir):
 
 @query(
     "q_fn_explode",
-    priority=20,
     oracle="""
     SELECT lang, token, count(*) AS cnt
     FROM (SELECT lang, unnest(string_split(text, ' ')) AS token FROM documents)
@@ -69,7 +67,6 @@ def q_fn_explode(spark, sf_dir):
 
 @query(
     "q_fn_posexplode",
-    priority=20,
     oracle="""
     SELECT doc_id,
            unnest(list_transform(toks, (x, i) -> i - 1)) AS pos,
@@ -88,7 +85,6 @@ def q_fn_posexplode(spark, sf_dir):
 
 @query(
     "q_fn_map",
-    priority=20,
     oracle="""
     SELECT event_id,
            value AS a_val,
@@ -116,7 +112,6 @@ def q_fn_map(spark, sf_dir):
 
 @query(
     "q_fn_json",
-    priority=20,
     oracle="""
     SELECT event_id,
            CAST(json_extract_string(props, '$.k') AS INTEGER) AS k_val,
@@ -138,7 +133,6 @@ def q_fn_json(spark, sf_dir):
 
 @query(
     "q_fn_struct",
-    priority=20,
     oracle="""
     SELECT c_custkey, c_name AS name, round(c_acctbal, 2) AS bal, c_mktsegment AS seg
     FROM customer
@@ -163,7 +157,6 @@ def q_fn_struct(spark, sf_dir):
 
 @query(
     "q_fn_variant",
-    priority=35,
     oracle="""
     SELECT event_id,
            CAST(json_extract(props, '$.k') AS BIGINT) AS k,

@@ -98,7 +98,6 @@ def q_fn_regex(spark, sf_dir):
 
 @query(
     "q_fn_hash",
-    priority=20,
     oracle="""
     SELECT p_partkey,
            md5(p_name) AS name_md5,
@@ -122,7 +121,6 @@ def q_fn_hash(spark, sf_dir):
 
 @query(
     "q_fn_binary",
-    priority=20,
     oracle="""
     SELECT doc_id,
            base64(encode(text)) AS payload_b64,

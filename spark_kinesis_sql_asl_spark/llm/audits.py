@@ -20,7 +20,6 @@ from .curation import _Q_VEC_SQL_DUCK, _Q_VEC_SQL_SPARK
 
 @query(
     "q_llm_embed_dimstats",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -64,7 +63,6 @@ def q_llm_embed_dimstats(spark, sf_dir):
 
 @query(
     "q_llm_composition",
-    priority=30,
     oracle="""
     SELECT coalesce(source, '') AS src,
            CAST(count(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS n_en,
@@ -113,7 +111,6 @@ def q_llm_composition(spark, sf_dir):
 
 @query(
     "q_llm_profile",
-    priority=35,  # round-4 window full — first driver row in round 5
     oracle="""
     WITH t AS (SELECT CAST(count(*) AS BIGINT) AS total FROM documents)
     SELECT 'text' AS col,
@@ -186,7 +183,6 @@ def q_llm_profile(spark, sf_dir):
 
 @query(
     "q_llm_embed_drift",
-    priority=35,  # round-5 window
     oracle="""
     WITH halves AS (
         SELECT vec_id % 2 AS half,
@@ -262,7 +258,6 @@ _PSI_HALF_MOD = 2  # snapshot split: doc_id parity (A = even, B = odd)
 
 @query(
     "q_llm_psi_drift",
-    priority=30,
     oracle="""
     WITH b AS (
         SELECT source,
@@ -359,7 +354,6 @@ def q_llm_psi_drift(spark, sf_dir):
 
 @query(
     "q_llm_domain_quality",
-    priority=30,
     oracle="""
     WITH feats AS (
         SELECT source,
@@ -463,7 +457,6 @@ def q_llm_domain_quality(spark, sf_dir):
 
 @query(
     "q_llm_data_card",
-    priority=30,
     oracle="""
     WITH feat AS (
         SELECT doc_id, lang, source,
@@ -590,7 +583,6 @@ _QLM_Q_BUCKET_PPM = 100_000  # 11 stopword-share buckets over [0, 1e6]
 
 @query(
     "q_llm_quality_len_matrix",
-    priority=30,
     oracle=f"""
     WITH feat AS (
         SELECT CAST(length(bin(len(string_split(coalesce(text, ''), ' '))))
@@ -668,7 +660,6 @@ _XDUP_OFFSET = 100_000
 
 @query(
     "q_llm_cross_dup_matrix",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, source, md5(text) AS h FROM documents
@@ -775,7 +766,6 @@ def q_llm_cross_dup_matrix(spark, sf_dir):
 
 @query(
     "q_llm_dedup_method_overlap",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=None,  # set below — assembled from the three family CTE texts
 )
 def q_llm_dedup_method_overlap(spark, sf_dir):
@@ -913,7 +903,6 @@ _REG_ORACLES["q_llm_dedup_method_overlap"] = f"""
 
 @query(
     "q_llm_source_vocab_overlap",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH toks AS (
         SELECT DISTINCT source,

@@ -31,7 +31,6 @@ _BIGRAM_TOP_K = 20
 
 @query(
     "q_llm_sample_hash",
-    priority=0,
     oracle=f"""
     SELECT lang,
            count(*) AS n_total,
@@ -223,7 +222,6 @@ _PMI_TOP_K = 20
 
 @query(
     "q_llm_pmi_bigrams",
-    priority=30,
     oracle=f"""
     WITH w AS (SELECT string_split(text, ' ') AS w FROM documents),
     uni AS (
@@ -325,7 +323,6 @@ _NTOK_DUCK = "len(string_split(coalesce(text, ''), ' '))"
 
 @query(
     "q_llm_pack",
-    priority=0,
     oracle=f"""
     WITH d AS (
         SELECT doc_id, lang, {_NTOK_DUCK} AS n_tok
@@ -377,7 +374,6 @@ def q_llm_pack(spark, sf_dir):
 
 @query(
     "q_llm_mixture",
-    priority=0,
     oracle=f"""
     WITH ps AS (
         SELECT source, CAST(sum({_NTOK_DUCK}) AS BIGINT) AS sum_tok
@@ -421,7 +417,6 @@ def q_llm_mixture(spark, sf_dir):
 
 @query(
     "q_llm_repetition",
-    priority=0,
     oracle="""
     WITH tc AS (
         SELECT doc_id, token, count(*) AS c
@@ -533,7 +528,6 @@ _Q_VEC_SQL_SPARK = (
 
 @query(
     "q_llm_kmeans",
-    priority=0,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -604,7 +598,6 @@ _E2E_MIN_RATIO = 0.3
 
 @query(
     "q_llm_curate_e2e",
-    priority=0,
     oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
@@ -733,9 +726,7 @@ def _coverage_oracle() -> str:
     """
 
 
-@query(
-    "q_llm_submodular_coverage", priority=35, oracle=_coverage_oracle()
-)
+@query("q_llm_submodular_coverage", oracle=_coverage_oracle())
 def q_llm_submodular_coverage(spark, sf_dir):
     """C94: greedy submodular max-coverage selection — pick {_COV_STEPS}
     documents from the {_COV_POOL}-doc candidate pool (largest distinct-
@@ -821,7 +812,6 @@ _PAD_CTX_SIZES = (128, 512, 2048)
 
 @query(
     "q_llm_pad_waste",
-    priority=30,
     oracle=f"""
     WITH d AS (
         SELECT lang, {_NTOK_DUCK} AS ntok FROM documents
@@ -886,7 +876,6 @@ _BUDGET_DENOM = 2  # train budget = half the corpus token count
 
 @query(
     "q_llm_token_budget",
-    priority=30,
     oracle=f"""
     WITH f AS (
         SELECT source,
@@ -1060,7 +1049,6 @@ def q_llm_token_budget(spark, sf_dir):
 
 @query(
     "q_llm_rejection_sample",
-    priority=30,
     oracle="""
     WITH feat AS (
         SELECT doc_id, source,
@@ -1142,7 +1130,6 @@ _TEMP_UQ = (
 
 @query(
     "q_llm_mixture_temperature",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH ps AS (
         SELECT source,

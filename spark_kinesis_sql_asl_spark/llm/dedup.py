@@ -636,7 +636,6 @@ _PREFIX_TAIL_OFFSET = 200_000  # synthetic prefix-sharers, disjoint from C1's
 
 @query(
     "q_llm_prefix_dup",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, lang, text FROM documents
@@ -835,7 +834,6 @@ def _containment_state(spark, sf_dir):
 
 @query(
     "q_llm_dedup_containment",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, lang, text FROM documents
@@ -1064,7 +1062,7 @@ def _containment_lsh_oracle() -> str:
     """
 
 
-@query("q_llm_dedup_containment_lsh", priority=30, oracle=_containment_lsh_oracle())
+@query("q_llm_dedup_containment_lsh", oracle=_containment_lsh_oracle())
 def q_llm_dedup_containment_lsh(spark, sf_dir):
     """C82s: the signature scale rung beside C82's exact containment pass
     (completing the C3-beside-C2 ladder for the asymmetric case). Same
@@ -1211,7 +1209,6 @@ _NORM_WS_OFFSET = 500_000
 
 @query(
     "q_llm_dedup_normalized",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, text FROM documents
@@ -1298,7 +1295,6 @@ _YC_PCTS = (80, 85, 90, 95)  # Jaccard thresholds (percent) swept
 
 @query(
     "q_llm_dedup_yield_curve",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -1422,7 +1418,6 @@ def q_llm_dedup_yield_curve(spark, sf_dir):
 
 @query(
     "q_llm_dup_centrality",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -1537,7 +1532,6 @@ _BLOOM_SLOTS_SPARK = ", ".join(
 
 @query(
     "q_llm_bloom_fpr",
-    priority=30,
     oracle=f"""
     WITH keys AS (
         SELECT doc_id,
@@ -1725,7 +1719,7 @@ def _pagerank_oracle() -> str:
     """
 
 
-@query("q_llm_dup_pagerank", priority=35, oracle=_pagerank_oracle())
+@query("q_llm_dup_pagerank", oracle=_pagerank_oracle())
 def q_llm_dup_pagerank(spark, sf_dir):
     """C135: damped PageRank over the C2 near-dup graph — the full
     iterative refinement of C118's one-step degree-discounted mass:
@@ -1849,7 +1843,7 @@ def _kcore_oracle() -> str:
     """
 
 
-@query("q_llm_dup_kcore", priority=35, oracle=_kcore_oracle())
+@query("q_llm_dup_kcore", oracle=_kcore_oracle())
 def q_llm_dup_kcore(spark, sf_dir):
     """C141: {_KCORE_K}-core of the C2 near-dup graph by
     {_KCORE_ROUNDS} rounds of synchronous peeling — strip every doc
@@ -1931,7 +1925,6 @@ _BANDCFGS = [(8, 2), (4, 4), (2, 8)]  # (bands, rows) over a 16-slot budget
 
 @query(
     "q_llm_band_tuning",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -2046,7 +2039,6 @@ _SHARD_N = 16
 
 @query(
     "q_llm_dedup_shard_locality",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -2190,7 +2182,6 @@ def q_llm_dedup_shard_locality(spark, sf_dir):
 
 @query(
     "q_llm_token_yield_funnel",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH base AS (
         SELECT doc_id,

@@ -27,7 +27,6 @@ _BITEXT_TAU = 0.3  # fixture embeddings are near-orthogonal (max pair ~0.47)
 
 @query(
     "q_llm_bitext_mine",
-    priority=30,
     oracle=f"""
     WITH j AS (
         SELECT d.doc_id, d.lang, e.label, e.embedding::DOUBLE[] AS v
@@ -103,7 +102,6 @@ _BATCH_MOD = 5  # doc_id % 5 == 0 plays the freshly-ingested batch (~20%)
 
 @query(
     "q_llm_ingest_dedup",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT DISTINCT md5(coalesce(text, '')) AS h
@@ -163,7 +161,6 @@ _GATE_SPACE = 16_777_216
 
 @query(
     "q_llm_mixture_sample",
-    priority=30,
     oracle=f"""
     WITH d AS (
         SELECT coalesce(source, '') AS src, {_NTOK_DUCK} AS n_tok,
@@ -275,7 +272,6 @@ _BUILD_PACK = 2048
 
 @query(
     "q_llm_corpus_build",
-    priority=30,
     oracle=f"""
     WITH uniq AS (
         SELECT doc_id, lang, text FROM (
@@ -374,7 +370,6 @@ _DIFF_RM_MOD, _DIFF_RM_RES = 19, 5
 
 @query(
     "q_llm_corpus_diff",
-    priority=30,
     oracle=f"""
     WITH old AS (
         SELECT doc_id, lang,
@@ -452,7 +447,6 @@ _JSONL_BAD_LINES = 3  # deterministic malformed lines injected per drop
 
 @query(
     "q_llm_ingest_jsonl",
-    priority=30,
     oracle=f"""
     SELECT 'ok' AS status, lang,
            CAST(count(*) AS BIGINT) AS n_docs,
@@ -532,7 +526,6 @@ def q_llm_ingest_jsonl(spark, sf_dir):
 
 @query(
     "q_llm_refresh_e2e",
-    priority=30,
     oracle=f"""
     WITH old AS (
         SELECT doc_id,
@@ -633,7 +626,6 @@ _SCD2_OPEN = 99  # valid_to sentinel for the current version
 
 @query(
     "q_llm_scd2",
-    priority=30,
     oracle=f"""
     WITH snaps AS (
         SELECT doc_id, 1 AS snap,
@@ -940,7 +932,7 @@ def _neardup_oracle() -> str:
     """
 
 
-@query("q_llm_ingest_neardup", priority=30, oracle=_neardup_oracle())
+@query("q_llm_ingest_neardup", oracle=_neardup_oracle())
 def q_llm_ingest_neardup(spark, sf_dir):
     """C126: incremental NEAR-dup ingest funnel — per language, how much
     of a freshly-arrived batch is exact-duplicate, near-duplicate, or

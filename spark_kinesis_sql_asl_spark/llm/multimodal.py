@@ -132,7 +132,6 @@ def sample_frames(records: DataFrame, every_n_bytes: int = 32, max_frames: int =
 
 @query(
     "q_llm_multimodal",
-    priority=20,
     oracle="""
     SELECT d.doc_id,
            d.lang,
@@ -166,7 +165,6 @@ _MAX_FRAMES = 4
 
 @query(
     "q_llm_frame_sample",
-    priority=30,
     oracle=f"""
     WITH b AS (
         SELECT d.doc_id, hex(encode(d.text)) AS blob_hex
@@ -213,7 +211,6 @@ _HEXD = "0123456789ABCDEF"
 
 @query(
     "q_llm_decode_media",
-    priority=30,
     oracle=f"""
     WITH b AS (
         SELECT d.doc_id, hex(encode(d.text)) AS blob_hex
@@ -294,7 +291,6 @@ def sniff_modality(records: DataFrame) -> DataFrame:
 
 @query(
     "q_llm_media_sniff",
-    priority=30,
     oracle="""
     SELECT doc_id,
            CASE doc_id % 6
@@ -344,7 +340,6 @@ _MEDIA_DUP_OFFSET = 600_000
 
 @query(
     "q_llm_media_dedup",
-    priority=35,
     oracle=f"""
     WITH bundle AS (
         -- DuckDB md5() takes VARCHAR, not BLOB; hashing the string hashes
@@ -449,7 +444,7 @@ WHERE bit_count(xor(a.ph, b.ph)) <= {_PHASH_MAX_HAMMING}
 """
 
 
-@query("q_llm_media_phash", priority=30, oracle=_PHASH_PAIRS_SQL)
+@query("q_llm_media_phash", oracle=_PHASH_PAIRS_SQL)
 def q_llm_media_phash(spark, sf_dir):
     """C93p: PERCEPTUAL near-dup for media — the rung VERDICT r5 placed
     behind C93's exact byte-hash pass. Mechanism is the production aHash
@@ -571,7 +566,6 @@ _DIMS_H = "16 + (doc_id * 7) % 2048"
 
 @query(
     "q_llm_media_dims",
-    priority=30,  # round-12 addition: first driver row in round 13
     # The oracle states the EXPECTED parse from the synthesis arithmetic
     # (the C61 route-table pattern): if the byte parser mis-reads an
     # offset, endianness, or width, the hashes diverge.
@@ -697,7 +691,6 @@ def _jpeg_lead_total_duck() -> str:
 
 @query(
     "q_llm_media_dims_jpeg",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     # The oracle states the EXPECTED parse from the synthesis arithmetic
     # (the C174 pattern) INCLUDING the walk-derived sof_offset and segment
     # count — a wrong length-field read, a misplaced marker compare, or an
@@ -869,7 +862,6 @@ _RIFF_DBYTES_DUCK = "octet_length(encode(coalesce(text, '')))"
 
 @query(
     "q_llm_media_dims_riff",
-    priority=30,  # round-14 addition; staged into the r14 window
     # The oracle states the EXPECTED parse from the synthesis arithmetic
     # (the C174 pattern): a wrong offset, a big-endian read of a
     # little-endian field, or a broken LE32 write/read round-trip
@@ -1067,7 +1059,6 @@ _PDF_COUNT_BASE = 9 + 2 + len(_PDF_OBJ1) + len(_PDF_OBJ2_PRE) + 1
 
 @query(
     "q_llm_media_dims_pdf",
-    priority=30,  # round-14 addition; staged into the r14 window
     # The oracle states the EXPECTED parse from the synthesis arithmetic
     # (the C174/C175 pattern) INCLUDING the locate-derived count_offset —
     # a mis-decoded version digit, a wrong fixed offset, or a locate that
@@ -1179,7 +1170,6 @@ def _mp4_lead_total_duck() -> str:
 
 @query(
     "q_llm_media_dims_mp4",
-    priority=30,  # round-14 addition; staged into the r14 window
     # The oracle states the EXPECTED parse from the synthesis arithmetic
     # (the C175 bar) INCLUDING the walk-derived moov_offset and lead-box
     # count — a wrong 32-bit size read, a misplaced fourcc compare, or an

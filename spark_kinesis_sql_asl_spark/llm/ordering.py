@@ -25,7 +25,6 @@ _CAL_BUCKETS = 10
 
 @query(
     "q_llm_quality_calibrate",
-    priority=30,
     oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
@@ -75,7 +74,6 @@ _ORDER_SHARDS = 8
 
 @query(
     "q_llm_train_order",
-    priority=30,
     oracle=f"""
     SELECT doc_id,
            doc_id % {_ORDER_SHARDS} AS shard,
@@ -122,7 +120,6 @@ _BAL_SHARDS = 4
 
 @query(
     "q_llm_shard_balance",
-    priority=30,
     oracle=f"""
     WITH ranked AS (
         SELECT lang, {_NTOK_DUCK} AS n_tok,
@@ -169,7 +166,6 @@ def q_llm_shard_balance(spark, sf_dir):
 
 @query(
     "q_llm_source_leak",
-    priority=30,
     oracle="""
     WITH hs AS (
         SELECT DISTINCT md5(coalesce(text, '')) AS h, source

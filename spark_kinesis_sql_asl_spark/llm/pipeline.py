@@ -568,7 +568,6 @@ _FP_K = 8  # bottom-k sketch size
 
 @query(
     "q_llm_fingerprint",
-    priority=0,
     oracle=f"""
     WITH grams AS (
         SELECT doc_id,
@@ -1177,7 +1176,6 @@ def q_llm_vec_quantize(spark, sf_dir):
 
 @query(
     "q_llm_dup_triangles",
-    priority=30,
     oracle=f"""
     WITH pairs AS ({_SIMHASH_PAIRS_SQL}),
     e AS (SELECT doc_a AS a, doc_b AS b FROM pairs),
@@ -1244,7 +1242,6 @@ def q_llm_dup_triangles(spark, sf_dir):
 
 @query(
     "q_llm_hamming_spectrum",
-    priority=35,  # round-5 window
     oracle=f"""
     WITH pairs AS ({_SIMHASH_PAIRS_CAND_SQL})
     SELECT hamming, CAST(count(*) AS BIGINT) AS n_pairs
@@ -1281,7 +1278,6 @@ def q_llm_hamming_spectrum(spark, sf_dir):
 
 @query(
     "q_llm_bucket_stats",
-    priority=35,  # round-5 window
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -1346,7 +1342,6 @@ def q_llm_bucket_stats(spark, sf_dir):
 
 @query(
     "q_llm_dedup_precision",
-    priority=35,  # round-5 window
     oracle=f"""
     WITH pairs AS ({_SIMHASH_PAIRS_SQL}),
     j AS (
@@ -1409,8 +1404,6 @@ from ..registry import _ORACLES as _REGISTERED_ORACLES  # noqa: E402
 
 @query(
     "q_llm_langid_confusion",
-    priority=35,
-    # Wrap C16's REGISTERED oracle verbatim as a CTE (the round-4 ADVICE
     # rule: derive, never duplicate — a C16 lexicon change cannot desync
     # this audit from the classifier it evaluates).
     oracle=f"""
@@ -1466,7 +1459,6 @@ _GOPHER_STOP_SQL = "['" + "', '".join(_GOPHER_STOPLIST) + "']"
 
 @query(
     "q_llm_gopher_rules",
-    priority=30,
     oracle=f"""
     WITH d AS (
         SELECT lang,
@@ -1587,8 +1579,6 @@ def q_llm_gopher_rules(spark, sf_dir):
 
 @query(
     "q_llm_dup_degree",
-    priority=30,
-    # Wrap C13's REGISTERED oracle verbatim (the C96 derive rule): a
     # SimHash banding change cannot desync this audit from the pair
     # generator it profiles.
     oracle=f"""
@@ -1664,7 +1654,6 @@ _FUNNEL_STAGES = ("length", "quality", "langid", "dedup")
 
 @query(
     "q_llm_filter_funnel",
-    priority=30,
     oracle=f"""
     WITH feat AS (
         SELECT doc_id, lang,
@@ -1816,7 +1805,6 @@ def q_llm_filter_funnel(spark, sf_dir):
 
 @query(
     "q_llm_dup_inflation",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH RECURSIVE pairs AS ({_SIMHASH_PAIRS_SQL}),
     edges AS (
@@ -1909,7 +1897,6 @@ def q_llm_dup_inflation(spark, sf_dir):
 
 @query(
     "q_llm_cluster_keep_best",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH RECURSIVE pairs AS ({{pairs}}),
     edges AS (

@@ -69,7 +69,7 @@ def _bm25_oracle() -> str:
     """
 
 
-@query("q_llm_bm25", priority=30, oracle=_bm25_oracle())
+@query("q_llm_bm25", oracle=_bm25_oracle())
 def q_llm_bm25(spark, sf_dir):
     """C83: BM25 top-{_BM25_TOPK} for a fixed 3-term query — the lexical
     ranking half of hybrid retrieval (k1={_BM25_K1}, b={_BM25_B}, the
@@ -142,7 +142,6 @@ _RRF_QUERY_ID = 0
 
 @query(
     "q_llm_rrf_fusion",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT embedding::DOUBLE[] AS qe FROM embeddings
@@ -243,7 +242,6 @@ _HN_QUERIES = 5  # vec_id < 5 are query vectors (the C4 convention)
 
 @query(
     "q_llm_hard_negatives",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id, label AS qlabel,
@@ -379,7 +377,7 @@ def _mmr_oracle() -> str:
     """
 
 
-@query("q_llm_mmr_select", priority=30, oracle=_mmr_oracle())
+@query("q_llm_mmr_select", oracle=_mmr_oracle())
 def q_llm_mmr_select(spark, sf_dir):
     """C87: Maximal Marginal Relevance selection (Carbonell & Goldstein,
     SIGIR 1998) — greedily pick {_MMR_STEPS} of the top-{_MMR_CAND}
@@ -489,7 +487,6 @@ _RK_QUERIES = 5
 
 @query(
     "q_llm_recall_at_k",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe
@@ -616,7 +613,6 @@ def _rel_case(a: str, b: str) -> str:
 
 @query(
     "q_llm_ndcg",
-    priority=35,  # round-8 window full — first driver row in round 9
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe,
@@ -752,7 +748,6 @@ _MRR_K = 10
 
 @query(
     "q_llm_mrr",
-    priority=35,  # round-8 window full — first driver row in round 9
     oracle=f"""
     WITH q AS (
         SELECT vec_id AS query_id, embedding::DOUBLE[] AS qe,

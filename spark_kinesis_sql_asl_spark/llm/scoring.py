@@ -26,7 +26,6 @@ _SURPRISAL = "21 - length(bin(greatest(1, freq_ppm)))"
 
 @query(
     "q_llm_surprisal",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, unnest(string_split(coalesce(text, ''), ' ')) AS tok
@@ -100,7 +99,6 @@ _RARE_MAX_DF = 2
 
 @query(
     "q_llm_novelty",
-    priority=30,
     oracle=f"""
     WITH dt AS (
         SELECT DISTINCT doc_id, tok FROM (
@@ -180,7 +178,6 @@ _AUC_SCORE_SQL = (
 
 @query(
     "q_llm_quality_auc",
-    priority=30,
     oracle=f"""
     WITH feat AS (
         SELECT lang,
@@ -304,7 +301,6 @@ _DSIR_DUCK_BUCKET = (
 
 @query(
     "q_llm_dsir_weight",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, source, string_split(coalesce(text, ''), ' ') AS ts
@@ -434,7 +430,6 @@ _ISO_BUCKET_PPM = 50_000  # score-bucket width: 21 buckets over [0, 1e6]
 
 @query(
     "q_llm_quality_isotonic",
-    priority=30,
     oracle=f"""
     WITH feat AS (
         SELECT (1000000 * len(list_filter(
@@ -564,7 +559,6 @@ _ECE_BINS = 10
 
 @query(
     "q_llm_quality_ece",
-    priority=35,  # round-8 window full — first driver row in round 9
     oracle=f"""
     WITH feat AS (
         SELECT lang,
@@ -670,7 +664,6 @@ _KAPPA_T2 = 550
 
 @query(
     "q_llm_rater_kappa",
-    priority=35,  # round-8 window full — first driver row in round 9
     oracle=f"""
     WITH feat AS (
         SELECT lang,

@@ -391,7 +391,6 @@ _MAXSIM_TOPK = 3
 
 @query(
     "q_llm_maxsim",
-    priority=30,
     oracle=f"""
     WITH tv AS (
         SELECT vec_id,

@@ -68,7 +68,6 @@ _KMV_K = 64
 
 @query(
     "q_llm_kmv_distinct",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT DISTINCT lang, unnest(string_split(text, ' ')) AS tok
@@ -174,7 +173,6 @@ _CMS_TOPN = 10
 
 @query(
     "q_llm_cms_heavy",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT unnest(string_split(text, ' ')) AS tok
@@ -290,7 +288,6 @@ _KMV_LANG_B = "de"
 
 @query(
     "q_llm_kmv_setops",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT DISTINCT lang, unnest(string_split(text, ' ')) AS tok
@@ -502,7 +499,6 @@ def _portable_sig_prefix(spark, sf_dir):
 
 @query(
     "q_llm_minhash_portable",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -607,7 +603,6 @@ _BA_ROWS = 4
 
 @query(
     "q_llm_band_assign",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH toks AS (
         SELECT doc_id, lang,
@@ -848,7 +843,6 @@ def _c3_band_recall_oracle() -> str:
 
 @query(
     "q_llm_band_recall_24",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     oracle=_c3_band_recall_oracle(),
 )
 def q_llm_band_recall_24(spark, sf_dir):

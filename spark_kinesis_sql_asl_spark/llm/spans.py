@@ -27,7 +27,6 @@ _SPAN_MIN_DOCS = 2
 
 @query(
     "q_llm_repeated_chunks",
-    priority=30,
     oracle=f"""
     WITH ch AS (
         SELECT doc_id, substr(text, s, {_SPAN_W}) AS chunk
@@ -102,7 +101,6 @@ def q_llm_repeated_chunks(spark, sf_dir):
 
 @query(
     "q_llm_freq_spectrum",
-    priority=30,
     oracle="""
     WITH t AS (
         SELECT unnest(string_split(coalesce(text, ''), ' ')) AS tok
@@ -156,7 +154,6 @@ _BPE_TOP_K = 20
 
 @query(
     "q_llm_bpe_pairs",
-    priority=30,
     oracle=f"""
     WITH words AS (
         SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w
@@ -270,7 +267,7 @@ def _bpe_train_oracle() -> str:
     )
 
 
-@query("q_llm_bpe_train3", priority=30, oracle=_bpe_train_oracle())
+@query("q_llm_bpe_train3", oracle=_bpe_train_oracle())
 def q_llm_bpe_train3(spark, sf_dir):
     """C56: distributed BPE TRAINING, {_BPE_ROUNDS} merge rounds — the
     iterative loop behind a real tokenizer build (Sennrich et al., ACL
@@ -428,7 +425,6 @@ def bpe_batch_select(words, n_cand=_BPE_BATCH_CAND, m=_BPE_BATCH_M):
 
 @query(
     "q_llm_bpe_batch",
-    priority=30,
     oracle=f"""
     WITH words AS (
         SELECT unnest(string_split(coalesce(text, ''), ' ')) AS w
@@ -486,7 +482,6 @@ _LM_MIN_BIGRAM = 5  # report conditionals only for bigrams seen >= 5 times
 
 @query(
     "q_llm_ngram_lm",
-    priority=30,
     oracle=f"""
     WITH w AS (
         SELECT string_split(coalesce(text, ''), ' ') AS ws FROM documents
@@ -556,7 +551,6 @@ def q_llm_ngram_lm(spark, sf_dir):
 
 @query(
     "q_llm_lm_score",
-    priority=30,
     oracle=f"""
     WITH w AS (
         SELECT doc_id, string_split(coalesce(text, ''), ' ') AS ws
@@ -656,7 +650,6 @@ _WIN_TOP = 50
 
 @query(
     "q_llm_winnow",
-    priority=30,
     oracle=f"""
     WITH hs AS (
         SELECT doc_id,
@@ -747,7 +740,6 @@ _DSR_DROP_PPM = 300_000  # drop a doc once >=30% of its chunks are shared
 
 @query(
     "q_llm_dup_span_ratio",
-    priority=30,
     oracle=f"""
     WITH ch AS (
         SELECT doc_id, lang,
@@ -855,7 +847,6 @@ _SSD_MIN_TOKS = _SSD_EXC_START + _SSD_EXC_LEN + 2  # donor length floor
 
 @query(
     "q_llm_substring_dup",
-    priority=30,
     oracle=f"""
     WITH base AS (
         SELECT doc_id,
@@ -1077,7 +1068,6 @@ _SSD_CTES = f"""
 
 @query(
     "q_llm_span_coverage",
-    priority=30,
     oracle=_SSD_CTES
     + f""",
     -- DISTINCT is load-bearing: duplicate (s, e) intervals make the
@@ -1204,7 +1194,6 @@ _LINE_KEY_BASE = 100_000  # occurrence key = doc_id * base + start pos
 
 @query(
     "q_llm_paragraph_dedup",
-    priority=30,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang,
@@ -1307,7 +1296,6 @@ def q_llm_paragraph_dedup(spark, sf_dir):
 
 @query(
     "q_llm_shingle_df_audit",
-    priority=35,
     oracle=f"""
     WITH base AS (
         SELECT doc_id,
@@ -1512,7 +1500,6 @@ def winnow_fingerprints(m, w: int = _C110S_W):
 
 @query(
     "q_llm_substring_sketch",
-    priority=30,  # round-12 addition: first driver row in round 13
     # The oracle is C110's EXACT query on purpose: winnowing at w <
     # MIN_RUN is a LOSSLESS sparsification for spans >= _SSD_MIN_SPAN
     # (window guarantee above), and the verify stage recomputes exact

@@ -33,7 +33,6 @@ _SPLIT_EXPR = (
 
 @query(
     "q_llm_split_stratified",
-    priority=30,
     oracle=f"""
     WITH hashed AS (
         SELECT lang, substr(md5(coalesce(text, '')), 1, 2) AS h
@@ -82,7 +81,6 @@ _RESERVOIR_K = 20
 
 @query(
     "q_llm_sample_reservoir",
-    priority=30,
     oracle=f"""
     SELECT doc_id, lang, rk FROM (
         SELECT doc_id, lang,
@@ -119,7 +117,6 @@ _HH_TOPK = 10
 
 @query(
     "q_llm_heavy_hitters",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT lang, unnest(list_distinct(string_split(
@@ -170,7 +167,6 @@ def q_llm_heavy_hitters(spark, sf_dir):
 
 @query(
     "q_llm_dedup_survivors",
-    priority=30,
     oracle=f"""
     WITH RECURSIVE exact_drop AS (
         SELECT doc_id FROM (
@@ -357,7 +353,6 @@ def heavy_hitters_sketch(spark, sf_dir, m: int):
 
 @query(
     "q_llm_heavy_hitters_sketch",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT lang, unnest(list_distinct(string_split(
@@ -399,7 +394,6 @@ _QUOTA_K = 3  # exemplars kept per (lang, source) stratum
 
 @query(
     "q_llm_quota_sample",
-    priority=30,
     oracle=f"""
     SELECT doc_id, lang, source, rk FROM (
         SELECT doc_id, lang, source,
@@ -478,7 +472,7 @@ def _ws_oracle() -> str:
     """
 
 
-@query("q_llm_weighted_sample", priority=35, oracle=_ws_oracle())
+@query("q_llm_weighted_sample", oracle=_ws_oracle())
 def q_llm_weighted_sample(spark, sf_dir):
     """C138: weighted sampling without replacement (Efraimidis &
     Spirakis 2006, A-ES) — draw {_WS_TOPK} documents with probability

@@ -25,7 +25,6 @@ def tokens(spark, sf_dir, with_lang: bool = True):
 
 @query(
     "q_llm_tokenize",
-    priority=20,
     oracle=f"""
     SELECT lang, token, count(*) AS cnt, count(DISTINCT doc_id) AS n_docs
     FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token FROM documents)
@@ -48,7 +47,6 @@ def q_llm_tokenize(spark, sf_dir):
 
 @query(
     "q_llm_tfidf",
-    priority=20,
     oracle="""
     WITH tok AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
@@ -84,7 +82,6 @@ def q_llm_tfidf(spark, sf_dir):
 
 @query(
     "q_llm_corpus_stats",
-    priority=20,
     oracle="""
     SELECT lang, source,
            count(*) AS n_docs,
@@ -117,7 +114,6 @@ _CHUNK_STRIDE = 80
 
 @query(
     "q_llm_chunk",
-    priority=20,
     oracle=f"""
     SELECT doc_id,
            CAST((start - 1) / {_CHUNK_STRIDE} AS INTEGER) AS chunk_idx,
@@ -171,7 +167,6 @@ _LEXICON = {
 
 @query(
     "q_llm_textscore",
-    priority=20,
     oracle=f"""
     WITH lex(word, pol) AS (
         VALUES {", ".join(f"('{w}', {p})" for w, p in _LEXICON.items())}
@@ -213,7 +208,6 @@ _URL_RE = "https?://[a-z0-9.-]+\\.[a-z]{2,}"
 
 @query(
     "q_llm_link_extract",
-    priority=30,
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id,
@@ -292,7 +286,6 @@ def q_llm_link_extract(spark, sf_dir):
 
 @query(
     "q_llm_fertility",
-    priority=35,  # round-5 window
     oracle="""
     WITH d AS (
         SELECT lang,
@@ -342,7 +335,6 @@ def q_llm_fertility(spark, sf_dir):
 
 @query(
     "q_llm_diversity",
-    priority=35,  # round-5 window
     oracle="""
     WITH c AS (
         SELECT coalesce(source, '') AS src, CAST(count(*) AS BIGINT) AS n
@@ -413,7 +405,6 @@ def q_llm_diversity(spark, sf_dir):
 
 @query(
     "q_llm_length_profile",
-    priority=35,  # round-5 window
     oracle="""
     WITH d AS (
         SELECT lang,
@@ -458,7 +449,6 @@ _VOCAB_KS = (100, 1000, 10000)
 
 @query(
     "q_llm_vocab_coverage",
-    priority=30,
     oracle=f"""
     WITH uni AS (
         SELECT tok, CAST(count(*) AS BIGINT) AS c FROM (
@@ -541,7 +531,6 @@ _RAKE_TOPK = 20
 
 @query(
     "q_llm_rake_keywords",
-    priority=35,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id,
@@ -645,7 +634,6 @@ _CHAR_ALPHA = "abcdefghijklmnopqrstuvwxyz0123456789 "
 
 @query(
     "q_llm_char_entropy",
-    priority=35,
     oracle=f"""
     WITH counts AS (
         SELECT doc_id,
@@ -727,7 +715,6 @@ _ZIPF_TOPK = 100
 
 @query(
     "q_llm_zipf_fit",
-    priority=35,
     oracle=f"""
     WITH vocab AS (
         SELECT tok, CAST(count(*) AS BIGINT) AS n
@@ -834,7 +821,6 @@ def q_llm_zipf_fit(spark, sf_dir):
 
 @query(
     "q_llm_hapax_rate",
-    priority=35,
     oracle="""
     WITH vocab AS (
         SELECT tok, CAST(count(*) AS BIGINT) AS n
@@ -884,7 +870,6 @@ _HEAPS_STEPS = 10
 
 @query(
     "q_llm_heaps_fit",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT doc_id % {_HEAPS_STEPS} AS m,
@@ -1053,7 +1038,6 @@ _TMPL_COPIES = 3  # synthetic fills per every-8th donor
 
 @query(
     "q_llm_template_mine",
-    priority=30,
     oracle=f"""
     WITH base AS (
         SELECT doc_id, source,
@@ -1172,7 +1156,6 @@ _NOV_N = 8  # gram width (tokens), overlapping — the C110 shingle width
 
 @query(
     "q_llm_ngram_novelty_decay",
-    priority=30,
     oracle=f"""
     WITH g AS (
         SELECT DISTINCT doc_id,
@@ -1296,7 +1279,6 @@ _STUFF_FLAG_PPM = 200_000  # flag docs whose top token is >20% of all tokens
 
 @query(
     "q_llm_keyword_stuffing",
-    priority=30,
     oracle=f"""
     WITH t AS (
         SELECT doc_id, lang,
@@ -1389,7 +1371,6 @@ def q_llm_keyword_stuffing(spark, sf_dir):
 
 @query(
     "q_llm_url_host_audit",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id,
@@ -1531,7 +1512,6 @@ _FK_COLLEGE = 12.0  # Flesch-Kincaid grade threshold for the "college" band
 
 @query(
     "q_llm_readability",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH per_doc AS (
         SELECT lang,
@@ -1632,7 +1612,6 @@ def q_llm_readability(spark, sf_dir):
 
 @query(
     "q_llm_whitespace_anomaly",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH corpus AS (
         SELECT doc_id,
@@ -1764,7 +1743,6 @@ _CODE_SNIPPET_B = " const fooBar = {a: 1}; varName.doThing();"
 
 @query(
     "q_llm_code_detect",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id, source,
@@ -1877,7 +1855,6 @@ _HOST_CAP = 40
 
 @query(
     "q_llm_host_cap_enforce",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH corpus AS (
         SELECT doc_id,
@@ -2010,7 +1987,6 @@ _UNI_Q = (
 
 @query(
     "q_llm_unigram_entropy",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH toks AS (
         SELECT source, unnest(string_split(coalesce(text, ''), ' ')) AS tok

@@ -68,7 +68,6 @@ _PAIRS_CTE = f"""
 
 @query(
     "q_llm_probe_curve",
-    priority=30,
     oracle=f"""
     WITH planes(p, pv) AS (VALUES
         {_PLANES_VALUES_SQL}
@@ -219,7 +218,6 @@ _LN2_MICRO = 693_147  # round(1e6 * ln 2): exclusive-token term, D14 domain
 
 @query(
     "q_llm_js_divergence",
-    priority=30,
     oracle=f"""
     WITH toks AS (
         SELECT lang, unnest(string_split(text, ' ')) AS tok
@@ -343,7 +341,6 @@ def q_llm_js_divergence(spark, sf_dir):
 
 @query(
     "q_llm_compress_proxy",
-    priority=30,
     oracle="""
     WITH w AS (
         SELECT lang, string_split(text, ' ') AS w FROM documents
@@ -416,7 +413,6 @@ def q_llm_compress_proxy(spark, sf_dir):
 
 @query(
     "q_llm_contrastive_pairs",
-    priority=30,
     oracle="""
     WITH corpus AS (
         SELECT doc_id, lang, text FROM documents
@@ -536,7 +532,6 @@ _CURRICULUM_PHASES = 3
 
 @query(
     "q_llm_curriculum_bins",
-    priority=30,
     oracle=f"""
     WITH scored AS (
         SELECT doc_id, lang,
@@ -649,7 +644,6 @@ _REWEIGHT_CAP_PPM = 10_000_000  # cap at 10x uniform
 
 @query(
     "q_llm_cluster_reweight",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id,
@@ -754,7 +748,6 @@ _TWO_HOP_MAX_DEG = 16
 
 @query(
     "q_llm_dup_two_hop",
-    priority=30,
     oracle=f"""
     WITH {_PAIRS_CTE},
     all_edges AS (
@@ -858,7 +851,6 @@ def q_llm_dup_two_hop(spark, sf_dir):
 
 @query(
     "q_llm_ingest_cdc",
-    priority=30,
     oracle=f"""
     WITH ops AS (
         SELECT doc_id, lang, 1 AS seq, 'I' AS op, text FROM documents
@@ -969,7 +961,6 @@ _SPLIT_CASE = (
 
 @query(
     "q_llm_split_leakage",
-    priority=30,
     oracle=f"""
     WITH {_PAIRS_CTE},
     sp AS (
@@ -1039,7 +1030,6 @@ def q_llm_split_leakage(spark, sf_dir):
 
 @query(
     "q_llm_quality_dup_matrix",
-    priority=30,
     oracle=f"""
     WITH {_PAIRS_CTE},
     deg AS (
@@ -1136,7 +1126,6 @@ _EPOCH_CAP_PPM = 4_000_000  # the ~4-epoch repetition ceiling
 
 @query(
     "q_llm_epoch_schedule",
-    priority=30,
     oracle=f"""
     WITH avail AS (
         SELECT source,

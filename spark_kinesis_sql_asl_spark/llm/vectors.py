@@ -71,7 +71,6 @@ def _assigned(spark, sf_dir):
 
 @query(
     "q_llm_kmeans_mstep",
-    priority=30,
     oracle=f"""
     WITH {_ASSIGN_CTES_DUCK},
     av AS (
@@ -119,7 +118,6 @@ _PQ_SUBDIM = 8  # 64 dims / 8 subspaces
 
 @query(
     "q_llm_pq_encode",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -321,7 +319,6 @@ def train_centroids(spark, sf_dir, rounds=_TRAIN_ROUNDS, k=_KMEANS_K):
 
 @query(
     "q_llm_kmeans_train",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -392,7 +389,6 @@ _OUT_TOPK = 10
 
 @query(
     "q_llm_semantic_outliers",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, label, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -491,7 +487,6 @@ _MARGIN_BOTTOMK = 20
 
 @query(
     "q_llm_margin_sample",
-    priority=30,
     oracle=f"""
     WITH {_ASSIGN_CTES_DUCK}
     SELECT vec_id,
@@ -557,7 +552,6 @@ def q_llm_margin_sample(spark, sf_dir):
 
 @query(
     "q_llm_cluster_purity",
-    priority=30,
     oracle=f"""
     WITH {_ASSIGN_CTES_DUCK},
     lab AS (
@@ -629,7 +623,6 @@ _KNN_UNLABELED_MOD = 20  # every 20th vector is "unlabeled" (SF-invariant)
 
 @query(
     "q_llm_knn_label_vote",
-    priority=35,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, label, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -723,8 +716,6 @@ from ..registry import _ORACLES as _REG_ORACLES  # noqa: E402
 
 @query(
     "q_llm_pq_adc_topk",
-    priority=30,
-    # Wrap C40's REGISTERED oracle verbatim as the codes CTE (the C96
     # derive-never-duplicate rule): a codebook/encoding change cannot
     # desync this query stage from the index it searches.
     oracle=f"""
@@ -1065,7 +1056,6 @@ def semantic_probes(spark, sf_dir):
 
 @query(
     "q_llm_dedup_semantic",
-    priority=30,
     oracle=f"""
     WITH {_SEM_CTES}
     SELECT vec_a, vec_b, dot_q, cos2_ppm FROM sem
@@ -1103,7 +1093,6 @@ def q_llm_dedup_semantic(spark, sf_dir):
 
 @query(
     "q_llm_semantic_cell_audit",
-    priority=30,
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -1191,7 +1180,6 @@ def q_llm_semantic_cell_audit(spark, sf_dir):
 
 @query(
     "q_llm_semantic_survivors",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH {_SEM_CTES},
     dropped AS (SELECT DISTINCT vec_b AS vec_id FROM sem)
@@ -1258,7 +1246,6 @@ _SEM_YIELD_BANDS = (
 
 @query(
     "q_llm_semantic_yield",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH {_SEM_CTES},
     n AS (SELECT CAST(count(*) AS BIGINT) AS n_vecs FROM q),
@@ -1334,7 +1321,6 @@ def semantic_cc_labels(spark, sf_dir):
 
 @query(
     "q_llm_semantic_clusters",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH RECURSIVE {_SEM_CTES},
     edges AS (
@@ -1460,7 +1446,6 @@ def _pca_iter_duck(r: int) -> str:
 
 @query(
     "q_llm_embed_pca_power",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -1548,7 +1533,6 @@ def q_llm_embed_pca_power(spark, sf_dir):
 
 @query(
     "q_llm_semantic_dedup_e2e",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH {_SEM_CTES},
     dropped AS (SELECT DISTINCT vec_b AS vec_id FROM sem),
@@ -1627,7 +1611,6 @@ def q_llm_semantic_dedup_e2e(spark, sf_dir):
 
 @query(
     "q_llm_embed_isotropy",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings
@@ -1785,7 +1768,6 @@ def q_llm_embed_isotropy(spark, sf_dir):
 
 @query(
     "q_llm_cluster_tightness",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH RECURSIVE {_SEM_CTES},
     edges AS (
@@ -1939,7 +1921,6 @@ def q_llm_cluster_tightness(spark, sf_dir):
 
 @query(
     "q_llm_pq_distortion",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH q AS (
         SELECT vec_id, {_Q_VEC_SQL_DUCK} AS qv FROM embeddings

@@ -221,7 +221,7 @@ def q_agg_approx_distinct(spark, sf_dir):
     )
 
 
-@query("q_agg_percentile_approx", priority=20)  # rows-only: sketch values are engine-specific
+@query("q_agg_percentile_approx")  # rows-only: sketch values are engine-specific
 def q_agg_percentile_approx(spark, sf_dir):
     """B29b: percentile_approx (Greenwald–Khanna quantile sketch) — p50/p95
     of extended price per return flag. No cross-engine oracle (GK sketches
@@ -362,7 +362,6 @@ def q_agg_argmax(spark, sf_dir):
 
 @query(
     "q_agg_listagg",
-    priority=30,
     oracle="""
     WITH pc AS (
         SELECT l_returnflag, l_linestatus,
@@ -404,7 +403,6 @@ def q_agg_listagg(spark, sf_dir):
 
 @query(
     "q_agg_decimal",
-    priority=30,
     oracle="""
     WITH dec AS (
         SELECT l_returnflag, l_linestatus,
@@ -474,7 +472,6 @@ def q_agg_decimal(spark, sf_dir):
 
 @query(
     "q_agg_boolcond",
-    priority=30,
     oracle="""
     SELECT l_returnflag,
            CAST(count_if(l_quantity > 25) AS BIGINT) AS n_bulk,
@@ -507,7 +504,6 @@ def q_agg_boolcond(spark, sf_dir):
 
 @query(
     "q_agg_mode",
-    priority=30,
     oracle="""
     SELECT o_orderstatus, o_orderpriority AS mode_priority, cnt FROM (
         SELECT o_orderstatus, o_orderpriority, CAST(count(*) AS BIGINT) AS cnt,
@@ -549,7 +545,6 @@ def q_agg_mode(spark, sf_dir):
 
 @query(
     "q_agg_weighted_median",
-    priority=30,
     oracle="""
     WITH d AS (
         SELECT lang, doc_id,
@@ -627,7 +622,6 @@ def q_agg_weighted_median(spark, sf_dir):
 
 @query(
     "q_agg_winsorized_mean",
-    priority=35,
     oracle="""
     WITH c AS (
         SELECT event_type,
@@ -695,7 +689,6 @@ def q_agg_winsorized_mean(spark, sf_dir):
 
 @query(
     "q_agg_skew_kurtosis",
-    priority=35,
     oracle="""
     WITH s AS (
         SELECT l_returnflag,
@@ -803,7 +796,6 @@ def q_agg_skew_kurtosis(spark, sf_dir):
 
 @query(
     "q_agg_hhi",
-    priority=30,
     oracle="""
     WITH rev AS (
         SELECT r.r_name, s.s_suppkey,
@@ -896,7 +888,6 @@ def q_agg_hhi(spark, sf_dir):
 
 @query(
     "q_agg_bivariate",
-    priority=30,
     oracle="""
     WITH t AS (
         SELECT l_returnflag,
@@ -1001,7 +992,6 @@ _WELCH_SPLIT_DATE = "1996-07-01"  # same timeline midpoint as B141
 
 @query(
     "q_agg_welch_t",
-    priority=35,
     oracle=f"""
     WITH t AS (
         SELECT n.n_name,
@@ -1133,7 +1123,6 @@ def q_agg_welch_t(spark, sf_dir):
 
 @query(
     "q_agg_theil",
-    priority=30,
     oracle="""
     WITH t AS (
         SELECT o_orderpriority AS grp,
@@ -1296,7 +1285,7 @@ def _cov_oracle() -> str:
     """
 
 
-@query("q_agg_cov_matrix", priority=35, oracle=_cov_oracle())
+@query("q_agg_cov_matrix", oracle=_cov_oracle())
 def q_agg_cov_matrix(spark, sf_dir):
     """B162: full covariance/correlation matrix over the four lineitem
     measures (quantity, extendedprice, discount, tax) — the
@@ -1391,7 +1380,6 @@ def q_agg_cov_matrix(spark, sf_dir):
 
 @query(
     "q_agg_grouping_id",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle="""
     SELECT l_returnflag, l_linestatus,
            CAST(grouping(l_returnflag) AS INTEGER) AS g_rf,
@@ -1430,7 +1418,6 @@ _PAIRED_Y1 = 1997
 
 @query(
     "q_agg_paired_ttest",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH per_cust AS (
         SELECT o_custkey,
@@ -1604,7 +1591,6 @@ def _boot_oracle() -> str:
 
 @query(
     "q_agg_bootstrap_ci",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=_boot_oracle(),
 )
 def q_agg_bootstrap_ci(spark, sf_dir):

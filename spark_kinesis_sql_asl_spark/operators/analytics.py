@@ -260,7 +260,7 @@ GROUP BY s.mon
 """
 
 
-@query("q_sql_recursive_spine", priority=0, oracle=_SPINE_SQL.format(tbl="orders"))
+@query("q_sql_recursive_spine", oracle=_SPINE_SQL.format(tbl="orders"))
 def q_sql_recursive_spine(spark, sf_dir):
     """B85: recursive CTE (new SQL surface in Spark 4) — a month spine from
     min to max order date, left-joined to monthly revenue so gap months
@@ -317,7 +317,6 @@ def q_set_intersect_all(spark, sf_dir):
 
 @query(
     "q_win_time_range",
-    priority=0,
     oracle="""
     SELECT event_id, user_id,
            count(*) OVER w AS n_7d,
@@ -465,7 +464,6 @@ def q_lateral_topn(spark, sf_dir):
 
 @query(
     "q_agg_filter_clause",
-    priority=0,
     oracle="""
     SELECT l_returnflag,
            count(*) AS n_rows,
@@ -503,7 +501,6 @@ _GAPFILL_HOUR_US = 3_600 * 1_000_000
 
 @query(
     "q_ts_gapfill",
-    priority=30,
     oracle=f"""
     WITH b AS (
         SELECT event_type,
@@ -603,7 +600,6 @@ _BASKET_TOP = 30
 
 @query(
     "q_basket_pairs",
-    priority=30,
     oracle=f"""
     WITH items AS (
         SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
@@ -722,7 +718,6 @@ def q_basket_pairs(spark, sf_dir):
 
 @query(
     "q_skew_audit",
-    priority=30,
     oracle="""
     WITH kc AS (
         SELECT o_custkey AS k, CAST(count(*) AS BIGINT) AS c
@@ -983,7 +978,6 @@ _RFM_ASOF = "1998-12-31"  # fixed "today" for recency — reproducible
 
 @query(
     "q_customer_rfm",
-    priority=35,  # round-4 window is full (49/50) — first driver row in r5
     oracle=f"""
     WITH base AS (
         SELECT o_custkey AS ck,
@@ -1061,7 +1055,6 @@ def q_customer_rfm(spark, sf_dir):
 
 @query(
     "q_events_mad_outliers",
-    priority=35,  # round-4 window full — first driver row in round 5
     oracle="""
     WITH c AS (
         SELECT event_type, event_id,
@@ -1148,7 +1141,6 @@ _BENFORD_PPM = {
 
 @query(
     "q_benford_audit",
-    priority=35,  # round-4 window full — first driver row in round 5
     oracle=f"""
     WITH d AS (
         SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
@@ -1209,7 +1201,6 @@ def q_benford_audit(spark, sf_dir):
 
 @query(
     "q_pareto_deciles",
-    priority=35,  # round-4 window full — first driver row in round 5
     oracle="""
     WITH rev AS (
         SELECT l_partkey AS pk,
@@ -1272,7 +1263,6 @@ def q_pareto_deciles(spark, sf_dir):
 
 @query(
     "q_agg_gini",
-    priority=30,
     oracle="""
     WITH x AS (
         SELECT o_custkey,
@@ -1342,7 +1332,6 @@ def q_agg_gini(spark, sf_dir):
 
 @query(
     "q_agg_entropy",
-    priority=30,
     oracle="""
     WITH d AS (
         SELECT CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
@@ -1411,7 +1400,6 @@ _SHIFT_SPLIT_DAY = 15  # first half vs second half of the fixture month
 
 @query(
     "q_events_chisq_shift",
-    priority=35,
     oracle=f"""
     WITH d AS (
         SELECT event_type,
@@ -1495,7 +1483,6 @@ _TIER_N = 5  # revenue quintiles per period
 
 @query(
     "q_customer_tier_migration",
-    priority=30,
     oracle=f"""
     WITH spend AS (
         SELECT o_custkey AS cust,
@@ -1596,7 +1583,6 @@ _COPURCHASE_MIN_INTER = 2
 
 @query(
     "q_graph_copurchase",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH sc AS (
         SELECT DISTINCT l_suppkey AS sk, o_custkey AS ck
@@ -1713,7 +1699,6 @@ _ABC_B_PCT = 90
 
 @query(
     "q_part_abc_xyz",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH rev AS (
         SELECT l_partkey AS pk,
@@ -1877,7 +1862,6 @@ def q_part_abc_xyz(spark, sf_dir):
 
 @query(
     "q_cohort_ltv",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH o AS (
         SELECT o_custkey,
@@ -1987,7 +1971,6 @@ def q_cohort_ltv(spark, sf_dir):
 
 @query(
     "q_part_safety_stock",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH wk AS (
         SELECT l_partkey,
@@ -2103,7 +2086,6 @@ def q_part_safety_stock(spark, sf_dir):
 
 @query(
     "q_sales_pvm_bridge",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH pm AS (
         SELECT l_partkey,
@@ -2236,7 +2218,6 @@ _ELAST_R2_DEN_Y = (
 
 @query(
     "q_part_price_elasticity",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH r AS (
         SELECT l_partkey,
@@ -2355,7 +2336,6 @@ def q_part_price_elasticity(spark, sf_dir):
 
 @query(
     "q_trade_flow_matrix",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     SELECT cn.n_name AS cust_nation, sn.n_name AS supp_nation,
            CAST(year(CAST(l.l_shipdate AS DATE)) AS BIGINT) AS ship_year,
@@ -2435,7 +2415,6 @@ def q_trade_flow_matrix(spark, sf_dir):
 
 @query(
     "q_orders_priority_aging",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH spans AS (
         SELECT o.o_orderkey, o.o_orderpriority,

@@ -9,8 +9,8 @@ such primitive in its HARDENED form (the convention every production query
 follows), over a tiny deterministic slice of the fixtures. If a future
 driver round hash-fails a real query, the canary row for its primitives
 says immediately whether the primitive convention or the query logic is at
-fault. Registered at priority 10 so they sit inside the driver's checked
-window right behind the round-3 re-verification block.
+fault. The driver's window takes each canary again once its last ledger row
+is three rounds old (``registry.driver_order``).
 
 All canaries are O(few hundred rows): key-modulus filters, never LIMIT
 (LIMIT without a total order is nondeterministic under parallel scan).
@@ -26,7 +26,6 @@ from ..tables import table
 
 @query(
     "q_canary_tok_split",
-    priority=10,
     oracle="""
     SELECT doc_id,
            len(string_split(coalesce(text, ''), ' ')) AS n_tok
@@ -51,7 +50,6 @@ def q_canary_tok_split(spark, sf_dir):
 
 @query(
     "q_canary_floor_cents",
-    priority=10,
     oracle="""
     SELECT event_id,
            CAST(floor(coalesce(value, 0) * 100) AS BIGINT) AS cents
@@ -76,7 +74,6 @@ def q_canary_floor_cents(spark, sf_dir):
 
 @query(
     "q_canary_int_sum",
-    priority=10,
     oracle="""
     SELECT event_type,
            count(*) AS n,
@@ -101,7 +98,6 @@ def q_canary_int_sum(spark, sf_dir):
 
 @query(
     "q_canary_range_frame",
-    priority=10,
     oracle="""
     SELECT event_id, user_id,
            count(*) OVER (
@@ -133,7 +129,6 @@ def q_canary_range_frame(spark, sf_dir):
 
 @query(
     "q_canary_round_double",
-    priority=10,
     oracle="""
     SELECT event_id,
            round(value / 7, 6) AS v7_r6,
@@ -160,7 +155,6 @@ def q_canary_round_double(spark, sf_dir):
 
 @query(
     "q_canary_filter_null_agg",
-    priority=10,
     oracle="""
     SELECT event_type,
            count(*) AS n,
@@ -195,7 +189,6 @@ def q_canary_filter_null_agg(spark, sf_dir):
 
 @query(
     "q_canary_neg_div",
-    priority=10,
     oracle="""
     SELECT event_id,
            CAST(coalesce(CAST(floor(value * 100) AS BIGINT), 0) - 5000
@@ -229,7 +222,6 @@ def q_canary_neg_div(spark, sf_dir):
 
 @query(
     "q_canary_decimal_sum",
-    priority=10,
     oracle="""
     WITH cents AS (
         SELECT l_orderkey,
@@ -295,7 +287,6 @@ def q_canary_decimal_sum(spark, sf_dir):
 
 @query(
     "q_canary_string_order",
-    priority=10,
     oracle="""
     WITH k AS (
         SELECT doc_id,
@@ -350,7 +341,6 @@ def q_canary_string_order(spark, sf_dir):
 
 @query(
     "q_canary_empty_agg",
-    priority=10,
     oracle="""
     SELECT 'global' AS shape,
            CAST(count(*) AS BIGINT) AS n,
@@ -399,7 +389,6 @@ def q_canary_empty_agg(spark, sf_dir):
 
 @query(
     "q_canary_try_arith",
-    priority=10,
     oracle="""
     SELECT event_id,
            CAST(floor(value * 100) AS BIGINT) AS cents,
@@ -433,7 +422,6 @@ def q_canary_try_arith(spark, sf_dir):
 
 @query(
     "q_canary_nullable_bigint",
-    priority=10,
     oracle="""
     SELECT o_orderkey,
            CASE WHEN o_orderkey % 3 = 0
@@ -464,7 +452,6 @@ def q_canary_nullable_bigint(spark, sf_dir):
 
 @query(
     "q_canary_month_trunc",
-    priority=10,
     oracle="""
     SELECT o_orderkey,
            CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month,
@@ -494,7 +481,6 @@ def q_canary_month_trunc(spark, sf_dir):
 
 @query(
     "q_canary_ln_quant",
-    priority=35,  # joins the p10 canary block in round 9 (r8 window full)
     oracle="""
     SELECT o_orderkey,
            CAST(round(100 * o_totalprice) AS BIGINT) AS cents,
@@ -554,7 +540,6 @@ _WIDEINT_PROBES = [
 
 @query(
     "q_canary_wideint_convert",
-    priority=35,  # joins the p10 canary block in round 9 (r8 window full)
     oracle=f"""
     WITH probes(id, v) AS (
         VALUES {", ".join(f"({i}, CAST('{v}' AS DECIMAL(38,0)))" for i, v in enumerate(_WIDEINT_PROBES))}
@@ -604,7 +589,6 @@ def q_canary_wideint_convert(spark, sf_dir):
 
 @query(
     "q_canary_unicode_case",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle="""
     WITH k AS (
         SELECT doc_id,
@@ -662,7 +646,6 @@ def q_canary_unicode_case(spark, sf_dir):
 
 @query(
     "q_canary_add_months",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     SELECT o_orderkey,
            CAST(o_orderdate AS TIMESTAMP) AS d,
@@ -739,7 +722,6 @@ def q_canary_add_months(spark, sf_dir):
 
 @query(
     "q_canary_regex_subset",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH k AS (
         SELECT doc_id,
@@ -813,7 +795,6 @@ def q_canary_regex_subset(spark, sf_dir):
 
 @query(
     "q_canary_array_semantics",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH k AS (
         SELECT event_id,

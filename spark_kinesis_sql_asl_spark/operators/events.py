@@ -27,7 +27,6 @@ _DAY_US = 86_400 * 1_000_000
 
 @query(
     "q_events_sessionize",
-    priority=30,
     oracle=f"""
     WITH e AS (
         SELECT user_id, epoch_us(ts) AS ts_us, event_id
@@ -103,7 +102,6 @@ def q_events_sessionize(spark, sf_dir):
 
 @query(
     "q_events_cohort_retention",
-    priority=30,
     oracle=f"""
     WITH e AS (
         SELECT user_id, epoch_us(ts) // {_DAY_US} AS day FROM events
@@ -147,7 +145,6 @@ _NULLSORT_LIMIT = 100
 
 @query(
     "q_sort_nulls_first",
-    priority=30,
     oracle=f"""
     SELECT event_id,
            nullif(event_type, 'click') AS et,
@@ -182,7 +179,6 @@ def q_sort_nulls_first(spark, sf_dir):
 
 @query(
     "q_events_transitions",
-    priority=35,  # round-4 window full — first driver row in round 5
     oracle="""
     WITH seq AS (
         SELECT user_id, event_type,
@@ -246,7 +242,6 @@ def q_events_transitions(spark, sf_dir):
 
 @query(
     "q_events_dau_wau",
-    priority=35,  # round-5 window
     oracle=f"""
     WITH du AS (
         SELECT DISTINCT epoch_us(ts) // {_DAY_US} AS day, user_id
@@ -310,7 +305,6 @@ def q_events_dau_wau(spark, sf_dir):
 
 @query(
     "q_events_hourly_profile",
-    priority=35,
     oracle="""
     WITH t AS (
         SELECT event_type,
@@ -399,9 +393,7 @@ def _markov_oracle() -> str:
     """
 
 
-@query(
-    "q_events_markov_stationary", priority=35, oracle=_markov_oracle()
-)
+@query("q_events_markov_stationary", oracle=_markov_oracle())
 def q_events_markov_stationary(spark, sf_dir):
     """B126: stationary-distribution estimate — {_MARKOV_STEPS} power-
     iteration steps of the B106 transition matrix from a uniform start:
@@ -471,7 +463,6 @@ _CONV_WINDOW_US = 86_400_000_000  # attribute conversions within 1 day
 
 @query(
     "q_events_conversion_rate",
-    priority=35,
     oracle=f"""
     WITH tagged AS (
         SELECT user_id, ts, event_id, event_type,
@@ -572,7 +563,6 @@ _BURST_BUCKET_US = 3_600_000_000  # hourly buckets
 
 @query(
     "q_events_burst_episodes",
-    priority=30,
     oracle=f"""
     WITH hourly AS (
         SELECT event_type,
@@ -678,7 +668,6 @@ _KS_TYPE_B = "purchase"
 
 @query(
     "q_events_ks_test",
-    priority=30,
     oracle=f"""
     WITH s AS (
         SELECT value,
@@ -795,7 +784,6 @@ def q_events_ks_test(spark, sf_dir):
 
 @query(
     "q_events_mannwhitney",
-    priority=35,  # round-8 window full (42 rotated + 8 new) — driver row in r9
     oracle=f"""
     WITH s AS (
         SELECT value,
@@ -921,7 +909,6 @@ _KM_EVENT = "purchase"
 
 @query(
     "q_events_survival",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH starts AS (
         SELECT user_id, min(epoch_us(ts)) AS t0
@@ -1092,7 +1079,6 @@ def q_events_survival(spark, sf_dir):
 
 @query(
     "q_events_kruskal",
-    priority=35,  # round-8 window full — driver row in r9
     oracle="""
     WITH s AS (
         SELECT event_type AS g, value AS x
@@ -1238,7 +1224,6 @@ def q_events_kruskal(spark, sf_dir):
 
 @query(
     "q_events_anova",
-    priority=35,  # round-8 window full — driver row in r9
     oracle="""
     WITH s AS (
         SELECT event_type AS g,
@@ -1365,7 +1350,6 @@ def q_events_anova(spark, sf_dir):
 
 @query(
     "q_events_spearman",
-    priority=35,  # round-8 window full — driver row in r9
     oracle="""
     WITH s AS (
         SELECT event_type AS g, value AS x,
@@ -1558,9 +1542,7 @@ def _entropy_rate_oracle() -> str:
     """
 
 
-@query(
-    "q_events_entropy_rate", priority=35, oracle=_entropy_rate_oracle()
-)
+@query("q_events_entropy_rate", oracle=_entropy_rate_oracle())
 def q_events_entropy_rate(spark, sf_dir):
     """B160: Markov-chain entropy rate of user behavior — H = -sum_i
     pi_i sum_j P_ij ln P_ij over the B106 transition matrix with B126's
@@ -1647,7 +1629,6 @@ _LIFT_PPM = 1_000_000
 
 @query(
     "q_events_lift_matrix",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle="""
     WITH baskets AS (
         SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS TIMESTAMP) AS d,
@@ -1749,7 +1730,6 @@ _PATH_TOP_K = 10
 
 @query(
     "q_events_path_prefix",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH ranked AS (
         SELECT user_id, event_type,
@@ -1824,7 +1804,6 @@ def q_events_path_prefix(spark, sf_dir):
 
 @query(
     "q_events_logrank",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH starts AS (
         SELECT user_id, min(epoch_us(ts)) AS t0
@@ -2081,7 +2060,6 @@ _ZTEST_WINDOW_US = 7 * _DAY_US  # 7-day attribution window
 
 @query(
     "q_events_proportion_ztest",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH starts AS (
         SELECT user_id, min(epoch_us(ts)) AS t0
@@ -2215,7 +2193,6 @@ _DECAY_Q = (
 
 @query(
     "q_events_decay_engagement",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH evs AS (
         SELECT user_id,
@@ -2296,7 +2273,6 @@ _SEQ_TOP_K = 20
 
 @query(
     "q_events_seq_patterns",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH ev AS (
         SELECT user_id, event_type AS et, ts, event_id
@@ -2456,7 +2432,6 @@ _ATTR_TOUCHES = ("click", "view")
 
 @query(
     "q_events_attribution",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH ev AS (
         SELECT user_id, event_type AS et, ts, event_id
@@ -2647,7 +2622,6 @@ def q_events_attribution(spark, sf_dir):
 
 @query(
     "q_events_lifecycle",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH ud AS (
         SELECT DISTINCT user_id,
@@ -2801,7 +2775,6 @@ _CUPED_VR_EXPR = (
 
 @query(
     "q_events_cuped",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH ev AS (
         SELECT user_id,
@@ -2984,7 +2957,6 @@ _MDE_Z_SUM = "2.8016"
 
 @query(
     "q_events_mde",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH per_user AS (
         SELECT event_type, user_id,
@@ -3081,7 +3053,6 @@ def q_events_mde(spark, sf_dir):
 
 @query(
     "q_events_did",
-    priority=30,  # round-12 addition: first driver row in round 13
     oracle="""
     WITH ev AS (
         SELECT (instr('0123456789abcdef',

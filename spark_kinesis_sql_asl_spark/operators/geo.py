@@ -120,7 +120,6 @@ def _supp_neighborhood(supp):
 
 @query(
     "q_geo_cell_density",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH cust AS (
         SELECT c.*, pos.slat, pos.slon
@@ -181,7 +180,6 @@ def q_geo_cell_density(spark, sf_dir):
 
 @query(
     "q_geo_dist_join",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH cust AS ({_coords_duck("c", "c_custkey", "customer",
                                 "c_custkey IS NOT NULL")}),
@@ -276,7 +274,6 @@ def q_geo_dist_join(spark, sf_dir):
 
 @query(
     "q_geo_knn",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH cust AS ({_coords_duck("c", "c_custkey", "customer",
                                 "c_custkey IS NOT NULL")}),
@@ -394,7 +391,6 @@ def q_geo_knn(spark, sf_dir):
 
 @query(
     "q_geo_hotspot",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH cust AS ({_coords_duck("c", "c_custkey", "customer",
                                 "c_custkey IS NOT NULL")}),
@@ -497,7 +493,6 @@ _FENCE_W = 1_500_000  # 1.5° fence width/height in micro-degrees
 
 @query(
     "q_geo_geofence",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH fences AS (
         SELECT CAST(k AS BIGINT) AS fence_id,
@@ -617,7 +612,6 @@ _DBSCAN_EPS_DUCK = (
 
 @query(
     "q_geo_dbscan",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH RECURSIVE pos AS (
         {_coords_duck("c", "c_custkey", "customer", "c_custkey IS NOT NULL")}

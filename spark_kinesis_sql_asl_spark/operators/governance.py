@@ -27,7 +27,6 @@ _BAL_BUCKET_DUCK = "CAST(floor(c_acctbal * 100) AS BIGINT) // 100000"
 
 @query(
     "q_privacy_kanon",
-    priority=30,
     oracle=f"""
     SELECT c_nationkey, c_mktsegment,
            {_BAL_BUCKET_DUCK} AS bal_bucket,
@@ -66,7 +65,6 @@ _LDIV_L = 3
 
 @query(
     "q_privacy_ldiversity",
-    priority=30,
     oracle=f"""
     SELECT c_nationkey,
            {_BAL_BUCKET_DUCK} AS bal_bucket,
@@ -105,7 +103,6 @@ _CONTRIB_CAP = 3  # max events one user may contribute per (day, type)
 
 @query(
     "q_privacy_bounded_contrib",
-    priority=30,
     oracle=f"""
     WITH ranked AS (
         SELECT event_type,
@@ -172,7 +169,6 @@ _TCLOSE_TV_MAX_PPM = 300_000  # flag groups farther than 0.30 TV distance
 
 @query(
     "q_privacy_tcloseness",
-    priority=35,
     oracle=f"""
     WITH g AS (
         SELECT c_nationkey,
@@ -272,7 +268,6 @@ _SUPP_MIN_CELL = 5  # cells below this count are suppressed (primary)
 
 @query(
     "q_privacy_cell_suppression",
-    priority=30,
     oracle=f"""
     WITH cells AS (
         SELECT n.n_name, c.c_mktsegment,
@@ -369,7 +364,6 @@ def _dp_hash_spark(expr: str) -> str:
 
 @query(
     "q_privacy_dp_hist",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH c AS (
         SELECT event_type, CAST(count(*) AS BIGINT) AS exact_count

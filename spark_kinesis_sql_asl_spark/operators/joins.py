@@ -357,7 +357,6 @@ _ASOF_TOL_US = 86_400_000_000  # 1-day tolerance
 
 @query(
     "q_join_asof_tolerance",
-    priority=35,
     oracle=f"""
     WITH tagged AS (
         SELECT user_id, ts, event_id, event_type,
@@ -434,7 +433,6 @@ def q_join_asof_tolerance(spark, sf_dir):
 
 @query(
     "q_join_asof_nearest",
-    priority=35,
     oracle="""
     WITH tagged AS (
         SELECT user_id, ts, event_id, event_type,
@@ -574,7 +572,6 @@ def bucketed_orders_customer(spark, sf_dir):
 
 @query(
     "q_join_bucketed",
-    priority=35,  # round-8 window full (42 rotated + 8 new) — driver row in r9
     oracle="""
     SELECT c.c_nationkey,
            CAST(count(*) AS BIGINT) AS n_orders,
@@ -626,7 +623,6 @@ _IVL_LEN = 7  # attribution-window length in days == time-bucket size
 
 @query(
     "q_join_interval_bucketed",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH ords AS (
         SELECT o_orderkey, o_orderpriority,

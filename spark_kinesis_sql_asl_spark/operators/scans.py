@@ -74,7 +74,6 @@ _Z_FILE_ROWS = 256  # z-codes per file tile -> a 16x16 block in (p, s) space
 
 @query(
     "q_zorder_layout",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH coords AS (
         SELECT CAST(l_partkey % 256 AS BIGINT) AS p,

@@ -24,7 +24,6 @@ _HOUR_US = 3_600_000_000
 
 @query(
     "q_ts_ohlc",
-    priority=30,
     oracle=f"""
     WITH t AS (
         SELECT event_type,
@@ -102,7 +101,6 @@ def q_ts_ohlc(spark, sf_dir):
 
 @query(
     "q_ts_time_weighted",
-    priority=30,
     oracle="""
     WITH t AS (
         SELECT event_type,
@@ -175,7 +173,6 @@ def q_ts_time_weighted(spark, sf_dir):
 
 @query(
     "q_join_asof_forward",
-    priority=30,
     oracle="""
     WITH tagged AS (
         SELECT user_id, ts, event_id, event_type,
@@ -241,7 +238,6 @@ _SLOPE_FRAME = 24  # rolling OLS over the trailing 24 observations
 
 @query(
     "q_win_rolling_slope",
-    priority=30,
     oracle=f"""
     WITH t AS (
         SELECT event_type, event_id,
@@ -348,7 +344,6 @@ _CUSUM_ALARM_MULT = 5
 
 @query(
     "q_cusum_changepoint",
-    priority=30,
     oracle=f"""
     WITH daily AS (
         SELECT n.n_name,
@@ -490,7 +485,6 @@ _EWMA_SLOW_DIV = 16
 
 @query(
     "q_ts_ewma_cross",
-    priority=30,
     oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT n.n_name,
@@ -627,7 +621,6 @@ def q_ts_ewma_cross(spark, sf_dir):
 
 @query(
     "q_ts_backlog",
-    priority=30,
     oracle="""
     WITH opens AS (
         SELECT o_orderpriority AS pri,
@@ -741,7 +734,6 @@ def q_ts_backlog(spark, sf_dir):
 
 @query(
     "q_events_inter_arrival",
-    priority=30,
     oracle="""
     WITH t AS (
         SELECT event_type, epoch_us(ts) AS us, event_id
@@ -808,7 +800,6 @@ def q_events_inter_arrival(spark, sf_dir):
 
 @query(
     "q_ts_seasonality",
-    priority=30,
     oracle="""
     WITH o AS (
         SELECT dayofweek(o_orderdate) AS dow,
@@ -889,7 +880,6 @@ _DAY_US_TS = 86_400_000_000
 
 @query(
     "q_ts_acf",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH daily AS (
         SELECT epoch_us(o_orderdate) // {_DAY_US_TS} AS day,
@@ -999,7 +989,6 @@ def q_ts_acf(spark, sf_dir):
 
 @query(
     "q_ts_pacf",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH daily AS (
         SELECT epoch_us(o_orderdate) // {_DAY_US_TS} AS day,
@@ -1136,7 +1125,6 @@ _CCF_TYPE_Y = "error"
 
 @query(
     "q_ts_ccf",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH daily AS (
         SELECT epoch_us(ts) // {_DAY_US_TS} AS day,
@@ -1264,7 +1252,6 @@ _TREND_H = 3  # forecast horizon in days
 
 @query(
     "q_ts_trend_forecast",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH daily AS (
         SELECT epoch_us(o_orderdate) // {_DAY_US_TS} AS day,
@@ -1384,7 +1371,6 @@ def q_ts_trend_forecast(spark, sf_dir):
 
 @query(
     "q_ts_peaks",
-    priority=35,  # round-8 window full — driver row in r9
     oracle=f"""
     WITH daily AS MATERIALIZED (
         SELECT epoch_us(o_orderdate) // {_DAY_US_TS} AS day,
@@ -1462,7 +1448,6 @@ _SEASONAL_TOP_K = 10
 
 @query(
     "q_ts_seasonal_outliers",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
@@ -1549,7 +1534,6 @@ _CONCURRENCY_TOP_K = 10
 
 @query(
     "q_win_order_concurrency",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH spans AS (
         SELECT o.o_orderkey,
@@ -1649,7 +1633,6 @@ _ROLL_MED_FRAME = 7  # trailing frame rows (days observed, ROWS not RANGE)
 
 @query(
     "q_win_rolling_median",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS d,
@@ -1735,7 +1718,6 @@ _LTTB_OUT_AREA = (
 
 @query(
     "q_ts_lttb",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -1885,7 +1867,6 @@ def q_ts_lttb(spark, sf_dir):
 
 @query(
     "q_ts_theil_sen",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2047,7 +2028,6 @@ _HURST_LNRS = (
 
 @query(
     "q_ts_hurst",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2234,7 +2214,6 @@ _DRAWDOWN_TOP_K = 10
 
 @query(
     "q_win_drawdown",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2341,7 +2320,6 @@ def q_win_drawdown(spark, sf_dir):
 
 @query(
     "q_ts_mann_kendall",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2463,7 +2441,6 @@ def q_ts_mann_kendall(spark, sf_dir):
 
 @query(
     "q_ts_runs_test",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2584,7 +2561,6 @@ def q_ts_runs_test(spark, sf_dir):
 
 @query(
     "q_ts_fano_dispersion",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle="""
     WITH daily AS (
         SELECT CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT)
@@ -2674,7 +2650,6 @@ _SEAS_HALF = 3  # centered 7-day trend frame: 3 preceding + current + 3 followin
 
 @query(
     "q_ts_seasonal_forecast",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2832,7 +2807,6 @@ def q_ts_seasonal_forecast(spark, sf_dir):
 
 @query(
     "q_ts_forecast_backtest",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -2976,7 +2950,6 @@ def q_ts_forecast_backtest(spark, sf_dir):
 
 @query(
     "q_orders_littles_law",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle="""
     WITH spans AS (
         SELECT o.o_orderkey,
@@ -3138,7 +3111,6 @@ _HOLT_H = 7  # forecast horizon released (days ahead)
 
 @query(
     "q_ts_holt_linear",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -3317,7 +3289,6 @@ _HW_SPARK_STEP = _hw_step(
 
 @query(
     "q_ts_holt_winters_mul",
-    priority=30,  # round-12 addition: first driver row in round 13
     oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -3538,7 +3509,6 @@ _CROSTON_SPARK = _croston_step("s.y", "(s.d - acc.prev_d)", "acc.z", "acc.p", "d
 
 @query(
     "q_ts_croston",
-    priority=30,  # round-12 addition: first driver row in round 13
     oracle=f"""
     WITH RECURSIVE demand AS (
         SELECT o_orderpriority AS grp,
@@ -3685,7 +3655,6 @@ _STL_HALF = _STL_M // 2
 
 @query(
     "q_ts_stl_decompose",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -3880,7 +3849,6 @@ _RSI_SPARK = _rsi_step("s.y", "acc.prev", "acc.ag", "acc.al", "div")
 
 @query(
     "q_ts_rsi",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT o_orderpriority AS grp,
@@ -4051,7 +4019,6 @@ _MACD_SPARK = _macd_step("e.y", "a.f", "a.s", "a.sig", "e.d", "div")
 
 @query(
     "q_ts_macd",
-    priority=30,  # round-14 addition; staged into the r14 window
     oracle=f"""
     WITH RECURSIVE daily AS (
         SELECT o_orderpriority AS grp,
@@ -4218,7 +4185,6 @@ _ATR_SPARK = _atr_step("s.h", "s.l", "a.pc", "a.atr", "a.mx", "div")
 
 @query(
     "q_ts_atr",
-    priority=30,  # round-14 addition; staged into the r14 window
     oracle=f"""
     WITH RECURSIVE t AS (
         SELECT event_type AS grp,
@@ -4380,7 +4346,6 @@ _STO_LO = 200_000  # oversold:  %K < 20 (ppm)
 
 @query(
     "q_ts_stochastic",
-    priority=30,  # round-14 addition; staged into the r14 window
     oracle=f"""
     WITH t AS (
         SELECT event_type AS grp,

@@ -181,7 +181,6 @@ def q_win_first_last(spark, sf_dir):
 
 @query(
     "q_win_nth_value",
-    priority=35,
     oracle="""
     SELECT o_orderkey, o_orderpriority,
            nth_value(o_orderkey, 3) OVER w AS third_key,
@@ -224,7 +223,6 @@ def q_win_nth_value(spark, sf_dir):
 
 @query(
     "q_win_mom_growth",
-    priority=30,
     oracle="""
     WITH monthly AS (
         SELECT n.n_name,
@@ -312,7 +310,6 @@ def q_win_mom_growth(spark, sf_dir):
 
 @query(
     "q_win_running_distinct",
-    priority=30,
     oracle="""
     WITH li AS (
         SELECT o.o_custkey AS cust, l.l_partkey AS part,
@@ -401,7 +398,6 @@ def q_win_running_distinct(spark, sf_dir):
 
 @query(
     "q_win_streaks",
-    priority=30,
     oracle="""
     WITH o AS (
         SELECT o_custkey AS cust, o_orderdate AS odate,
@@ -489,7 +485,6 @@ def q_win_streaks(spark, sf_dir):
 
 @query(
     "q_win_skyline",
-    priority=35,  # round-8 window full — driver row in r9
     oracle="""
     WITH o AS (
         SELECT o_orderpriority AS grp, o_orderkey AS okey,
@@ -573,7 +568,6 @@ _ROLL_CORR_EXPR = (
 
 @query(
     "q_win_rolling_corr",
-    priority=30,  # round-10 addition: first driver row in round 11
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',
@@ -673,7 +667,6 @@ _BOLL_Z_EXPR = (
 
 @query(
     "q_win_bollinger",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH daily AS (
         SELECT date_diff('day', DATE '1970-01-01',

@@ -16,7 +16,6 @@ from .envelope import decode_json_payload, wrap_events
 
 @query(
     "q_kinesis_schema",
-    priority=20,
     oracle="""
     SELECT props AS data_str,
            'events' AS stream_name,
@@ -41,7 +40,6 @@ def q_kinesis_schema(spark, sf_dir):
 
 @query(
     "q_kinesis_decode_json",
-    priority=0,
     oracle="""
     SELECT CAST(user_id AS VARCHAR) AS partition_key,
            count(*) AS n_records,
@@ -73,7 +71,6 @@ def q_kinesis_decode_json(spark, sf_dir):
 
 @query(
     "q_kinesis_replay_window",
-    priority=20,
     oracle="""
     WITH b AS (SELECT min(ts) AS t0 FROM events)
     SELECT CAST(event_id AS VARCHAR) AS sequence_number,
@@ -118,7 +115,6 @@ def q_kinesis_replay_window(spark, sf_dir):
 
 @query(
     "q_kinesis_decode_csv",
-    priority=20,
     oracle="""
     SELECT event_id,
            event_type,
@@ -166,7 +162,6 @@ def q_kinesis_decode_csv(spark, sf_dir):
 
 @query(
     "q_kinesis_shard_route",
-    priority=20,
     oracle="""
     SELECT (instr('0123456789abcdef', substr(md5(CAST(user_id AS VARCHAR)), 32, 1)) - 1) % 4
                AS shard,
@@ -214,7 +209,6 @@ _RESHARD_COLD_DIV = 2  # merge a pair when BOTH carry <= 1/2 the mean
 
 @query(
     "q_kinesis_reshard_plan",
-    priority=30,
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -331,7 +325,6 @@ _AUDIT_SHARDS = 4  # the A5 md5-ring route
 
 @query(
     "q_kinesis_throughput_audit",
-    priority=30,  # round-9 addition: first driver row in round 10
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -428,7 +421,6 @@ _LAG_CKPT_DEN = 10
 
 @query(
     "q_kinesis_lag_audit",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -566,7 +558,6 @@ _HOTKEY_MULT = 10
 
 @query(
     "q_kinesis_hotkey_audit",
-    priority=30,  # round-11 addition: first driver row in round 12
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -685,7 +676,6 @@ _EFO_CONSUMERS = 3  # modeled consumer-group count sharing the stream
 
 @query(
     "q_kinesis_efo_plan",
-    priority=30,  # round-12 addition: first driver row in round 13
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -806,7 +796,6 @@ _LEASE_W_NEW = 5  # a worker joins (the KCL scale event under audit)
 
 @query(
     "q_kinesis_lease_plan",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -925,7 +914,6 @@ _US_PER_HOUR = 3_600_000_000
 
 @query(
     "q_kinesis_retention_plan",
-    priority=30,  # round-13 addition; staged into the r13 window (11)
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -1116,7 +1104,6 @@ _COST_EXT_HOUR_NANO = 20_000_000  # $0.020 / extended-retention shard-hour
 
 @query(
     "q_kinesis_cost_plan",
-    priority=30,  # round-14 addition; staged into the r14 window
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',
@@ -1362,7 +1349,6 @@ _KPL_MAX_AGG_BYTES = 1_048_576  # the 1 MiB PutRecord payload ceiling
 
 @query(
     "q_kinesis_kpl_plan",
-    priority=30,  # round-14 addition; staged into the r14 window
     oracle=f"""
     WITH routed AS (
         SELECT (instr('0123456789abcdef',

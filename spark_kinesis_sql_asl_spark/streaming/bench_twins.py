@@ -292,34 +292,10 @@ def _ev_bounded(spark, staged):
     )
 
 
-def _ev_bounded_tws(spark, staged):
-    from .stateful import streaming_bounded_contrib_tws
-
-    src = _read(spark, staged).where(
-        F.col("ts").isNotNull() & F.col("event_type").isNotNull()
-    )
-    return streaming_bounded_contrib_tws(
-        src.select(
-            "user_id",
-            "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        ),
-        cap=3,
-    )
-
-
 def _ev_quant(spark, staged):
     from .stateful import streaming_quantile_octaves
 
     return streaming_quantile_octaves(
-        _read(spark, staged).select("event_type", "value")
-    )
-
-
-def _ev_quant_tws(spark, staged):
-    from .stateful import streaming_quantile_octaves_tws
-
-    return streaming_quantile_octaves_tws(
         _read(spark, staged).select("event_type", "value")
     )
 
@@ -464,29 +440,8 @@ TWINS = {
     "s_running_distinct": ("lineitem_cust", _li_rdistinct),
 }
 
-# The transformWithState twins (s_quantile_octaves_tws and — round 14,
-# the documented per-key-machinery floor exit — s_bounded_contrib_tws)
-# join only when the state protocol's protobuf dependency is importable —
-# same gate as their parity tests (absent in this container).
-try:  # pragma: no cover - environment-dependent
-    import google.protobuf.descriptor  # noqa: F401
-
-    TWINS["s_quantile_octaves_tws"] = ("events", _ev_quant_tws)
-    TWINS["s_bounded_contrib_tws"] = ("events", _ev_bounded_tws)
-except ImportError:
-    pass
-
 # complete-mode aggregations (no watermark): everything else runs update
 _COMPLETE_MODE = {"s_cell_density"}
-
-# transformWithState requires the RocksDB state-store provider; the bench
-# sets it around exactly these runs (and restores the session default
-# after), mirroring the parity test's conf handling.
-_TWS_TWINS = {"s_quantile_octaves_tws", "s_bounded_contrib_tws"}
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
 
 
 def run_streaming_bench(spark, sf_dir: str, work_root: str) -> dict[str, float]:
@@ -501,39 +456,20 @@ def run_streaming_bench(spark, sf_dir: str, work_root: str) -> dict[str, float]:
         t0 = time.perf_counter()
         staged[key] = _STAGERS[key](spark, sf_dir, work_root)
         timings[f"_stage_{key}"] = round(time.perf_counter() - t0, 3)
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
     for name in sorted(TWINS):
         key, build = TWINS[name]
-        prev_provider = None
-        if name in _TWS_TWINS:  # pragma: no cover - protobuf-gated
-            prev_provider = spark.conf.get(provider_key, None)
-            spark.conf.set(provider_key, _ROCKSDB_PROVIDER)
         t0 = time.perf_counter()
-        try:
-            q = (
-                build(spark, staged[key])
-                .writeStream.format("noop")
-                .outputMode(
-                    "complete" if name in _COMPLETE_MODE else "update"
-                )
-                .option(
-                    "checkpointLocation",
-                    os.path.join(work_root, f"ckpt_{name}"),
-                )
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(600)
-            if q.isActive:  # pragma: no cover - hung stream
-                q.stop()
-                raise RuntimeError(
-                    f"streaming twin {name} did not drain in 600s"
-                )
-        finally:
-            if name in _TWS_TWINS:  # pragma: no cover - protobuf-gated
-                if prev_provider is None:
-                    spark.conf.unset(provider_key)
-                else:
-                    spark.conf.set(provider_key, prev_provider)
+        q = (
+            build(spark, staged[key])
+            .writeStream.format("noop")
+            .outputMode("complete" if name in _COMPLETE_MODE else "update")
+            .option("checkpointLocation", os.path.join(work_root, f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
+        if q.isActive:  # pragma: no cover - hung stream
+            q.stop()
+            raise RuntimeError(f"streaming twin {name} did not drain in 600s")
         timings[name] = round(time.perf_counter() - t0, 3)
     return timings

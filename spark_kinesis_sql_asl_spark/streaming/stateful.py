@@ -1,26 +1,16 @@
-"""B68: arbitrary stateful streaming operators, API-adaptive.
+"""B68: arbitrary stateful streaming operators on ``applyInPandasWithState``.
 
-PySpark ships two arbitrary-stateful APIs:
+Every operator here keeps keyed state through one API,
+``applyInPandasWithState`` (``GroupState``): the grouped input of each key
+arrives as pandas frames, the fold updates a tuple-typed state and yields
+the key's rows for the micro-batch. It needs no runtime dependency beyond
+pandas and pyarrow, and it runs under either state-store provider (the
+default HDFS-backed one or ``RocksDBStateStoreProvider``, a session conf).
 
-- ``transformWithStateInPandas`` (PySpark 4 ``StatefulProcessor``): the
-  modern path — typed state variables (ValueState/ListState/MapState),
-  timers, TTL, and RocksDB state-store support. Its Python worker speaks a
-  protobuf state-server protocol, so it requires the ``google.protobuf``
-  pip package at runtime.
-- ``applyInPandasWithState`` (legacy ``GroupState``): no extra runtime
-  dependency; tuple-typed state only.
-
-``running_count`` exposes ONE operator semantics — per-key monotone running
-event count, emitted once per key per micro-batch — and picks the best
-available engine path at call time. On a production cluster with protobuf
-installed it runs the modern API (RocksDB-friendly, timer-capable); in a
-minimal container it degrades to the legacy API with bit-identical output.
-The returned ``api`` string lets callers/tests record which path ran.
-
-At 100 TB: state is partitioned by the grouping key across executors; both
-APIs shuffle once on the key and then update state partition-locally. The
-RocksDB provider (modern path) keeps per-executor state out of the JVM heap,
-which is the difference between a 10 M-key and a 10 B-key keyspace.
+At 100 TB: state is partitioned by the grouping key across executors; the
+operator shuffles once on the key and then updates state partition-locally.
+The RocksDB provider keeps per-executor state out of the JVM heap, which is
+the difference between a 10 M-key and a 10 B-key keyspace.
 """
 
 from __future__ import annotations
@@ -30,44 +20,9 @@ import pandas as pd
 _OUT_SCHEMA = "user_id bigint, running_n bigint"
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def _modern(grouped):
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._cnt = handle.getValueState(
-                "cnt", StructType([StructField("n", LongType())])
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._cnt.get()[0] if self._cnt.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._cnt.update((n,))
-            yield pd.DataFrame({"user_id": [key[0]], "running_n": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return grouped.transformWithStateInPandas(
-        RunningCount(),
-        outputStructType=_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def _legacy(grouped):
+def running_count(stream_df, key_col: str = "user_id"):
+    """Per-key running event count over a stream, emitted once per key per
+    micro-batch."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def running(key, pdfs, state: GroupState):
@@ -77,25 +32,13 @@ def _legacy(grouped):
         state.update((cnt,))
         yield pd.DataFrame({"user_id": [key[0]], "running_n": [cnt]})
 
-    return grouped.applyInPandasWithState(
+    return stream_df.groupBy(key_col).applyInPandasWithState(
         running,
         outputStructType=_OUT_SCHEMA,
         stateStructType="cnt bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def running_count(stream_df, key_col: str = "user_id"):
-    """Per-key running event count over a stream; returns ``(df, api)``.
-
-    ``api`` is ``"transformWithStateInPandas"`` when the modern path ran,
-    else ``"applyInPandasWithState"``.
-    """
-    grouped = stream_df.groupBy(key_col)
-    if _protobuf_available():
-        return _modern(grouped), "transformWithStateInPandas"
-    return _legacy(grouped), "applyInPandasWithState"
 
 
 _MG_OUT_SCHEMA = "lang string, tok string, est bigint, seq bigint"
@@ -121,9 +64,8 @@ def streaming_misra_gries(doc_stream, m: int = 64):
 
     At 100 TB: one shuffle on lang (or (lang, shard-salt) for giant
     languages, merging summaries downstream); state is m counters per key
-    — constant memory regardless of vocabulary; RocksDB-backed under the
-    modern state store. Legacy ``applyInPandasWithState`` is used for its
-    dependency-free availability (B68 documents the API-adaptive story).
+    — constant memory regardless of vocabulary; off-heap under the
+    RocksDB state-store provider.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -204,9 +146,8 @@ def streaming_quantile_octaves(event_stream, quantiles=(0.5, 0.9, 0.99)):
     downstream without widening the bound.
 
     At 100 TB: one shuffle on event_type; state is {_QH_BINS} BIGINTs per
-    key regardless of stream length; RocksDB-backed under the modern state
-    store. Same legacy ``applyInPandasWithState`` surface as the MG sketch
-    above (B68 documents the API-adaptive story)."""
+    key regardless of stream length; off-heap under the RocksDB
+    state-store provider."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def octave(cents: int) -> int:
@@ -258,84 +199,6 @@ def streaming_quantile_octaves(event_stream, quantiles=(0.5, 0.9, 0.99)):
     )
 
 
-def streaming_quantile_octaves_tws(event_stream, quantiles=(0.5, 0.9, 0.99)):
-    """C61s on the MODERN arbitrary-state API: the same per-event_type
-    quantile-octave histogram as :func:`streaming_quantile_octaves`, but
-    as a ``transformWithStateInPandas`` ``StatefulProcessor`` (Spark 4's
-    successor to ``applyInPandasWithState`` — typed state handles, timer
-    support, RocksDB-only). Semantics are IDENTICAL by construction —
-    the harness test pins the two implementations equal on the same
-    stream — so this is the forward-migration path B68's docstring
-    promises: swap the operator surface, keep the fold.
-
-    Requires the RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass``) AND the
-    ``google.protobuf`` Python package (the TWS state protocol wire
-    format — NOT installed in this container, so the twin-equality test
-    skips here and runs where protobuf exists, like the env-gated
-    Kinesis suite). The legacy twin runs on any provider with no extra
-    deps, which is why it remains the default surface."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "qh", "cnts array<bigint>, n bigint, seq bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                cnts, n, seq = self._st.get()
-                cnts = list(cnts)
-            else:
-                cnts, n, seq = [0] * _QH_BINS, 0, 0
-            for pdf in rows:
-                for v in pdf["value"]:
-                    if v is None or (isinstance(v, float) and v != v):
-                        continue
-                    c = int(v * 100 // 1)
-                    o = c.bit_length() if c >= 1 else 0
-                    cnts[min(o, _QH_BINS - 1)] += 1
-                    n += 1
-            seq += 1
-            self._st.update((cnts, n, seq))
-
-            def q_oct(p: float) -> int:
-                if n == 0:
-                    return -1
-                want = max(1, -(-int(p * n * 1_000_000) // 1_000_000))
-                run = 0
-                for o, c in enumerate(cnts):
-                    run += c
-                    if run >= want:
-                        return o
-                return _QH_BINS - 1
-
-            yield pd.DataFrame(
-                {
-                    "event_type": [key[0]],
-                    "n": [n],
-                    "p50_oct": [q_oct(quantiles[0])],
-                    "p90_oct": [q_oct(quantiles[1])],
-                    "p99_oct": [q_oct(quantiles[2])],
-                    "seq": [seq],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return event_stream.groupBy("event_type").transformWithStateInPandas(
-        statefulProcessor=_Proc(),
-        outputStructType=_QH_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 _BC_OUT_SCHEMA = (
     "user_id bigint, event_type string, day bigint, "
     "capped_n bigint, total_n bigint, seq bigint"
@@ -358,12 +221,11 @@ def streaming_bounded_contrib(event_stream, cap: int = 3):
     exact: the batch form keeps the EARLIEST ``cap`` rows per key, the
     stream form counts arrivals saturating at ``cap`` — same per-key
     counts, hence identical (type, day) rollups (pinned by the harness
-    test). Same legacy ``applyInPandasWithState`` surface as the MG
-    sketch above (B68 documents the API-adaptive story).
+    test).
 
     Cost profile (round 13, VERDICT r12 item #4): this twin keys on
     (user, type, day) — ~81k distinct keys at sf0.1, an order of
-    magnitude more than any sibling, and the legacy API invokes the
+    magnitude more than any sibling, and the API invokes the
     Python fold and yields one frame PER KEY. A floor experiment (fold
     body replaced by a constant preconstructed yield) still drained in
     ~9 s — the per-key serializer/state machinery, not this fold body,
@@ -371,9 +233,6 @@ def streaming_bounded_contrib(event_stream, cap: int = 3):
     API. What does help: building the 1-row yield from pre-wrapped numpy
     arrays instead of Python lists skips pandas' per-column list→array
     inference (~2× cheaper per yield, measured 8.4→6.5 s warm at sf0.1).
-    The real fix is the ValueState form under ``transformWithState``
-    (no per-key pandas slicing) where its protobuf dependency exists —
-    the same environment gate as the s_quantile_octaves_tws twin.
     Splitting the availableNow drain into more micro-batches makes it
     WORSE (total fold invocations = keys-per-batch summed across
     batches, and re-slicing state per batch adds overhead)."""
@@ -414,73 +273,6 @@ def streaming_bounded_contrib(event_stream, cap: int = 3):
     )
 
 
-def streaming_bounded_contrib_tws(event_stream, cap: int = 3):
-    """B117-stream on the MODERN arbitrary-state API (round 14, VERDICT
-    r13 item #6): the same per-(user, event_type, day) saturating counter
-    as :func:`streaming_bounded_contrib`, as a
-    ``transformWithStateInPandas`` ``StatefulProcessor`` with ONE
-    ValueState of two BIGINTs + seq. Semantics are IDENTICAL by
-    construction (the C61s-tws pattern) — the harness test pins the two
-    implementations equal on the same stream where the API is available.
-
-    WHY this twin exists: the legacy twin's measured floor is the per-key
-    pandas slice/yield machinery of ``applyInPandasWithState`` (a fold
-    body replaced by a constant yield still drained in ~9 s at sf0.1's
-    ~81k keys — streaming_bounded_contrib's docstring documents the
-    experiment), so no fold rewrite on that API can reach the ~4 s
-    sibling ambition. ``transformWithState`` drops the per-key pandas
-    requirement (typed state handles, RocksDB-backed), which is exactly
-    the documented exit. Requires the ``google.protobuf`` package (the
-    TWS state-protocol wire format — absent in this container, so the
-    parity test import-skips and the bench row joins only where the
-    dependency exists; same env-gate as
-    :func:`streaming_quantile_octaves_tws`)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class _Proc(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._st = handle.getValueState(
-                "bc", "capped bigint, total bigint, seq bigint"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._st.exists():
-                capped, total, seq = self._st.get()
-            else:
-                capped, total, seq = 0, 0, 0
-            for pdf in rows:
-                n = len(pdf)
-                total += n
-                capped = min(cap, capped + n)
-            seq += 1
-            self._st.update((capped, total, seq))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "event_type": [key[1]],
-                    "day": [key[2]],
-                    "capped_n": [capped],
-                    "total_n": [total],
-                    "seq": [seq],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return event_stream.groupBy(
-        "user_id", "event_type", "day"
-    ).transformWithStateInPandas(
-        statefulProcessor=_Proc(),
-        outputStructType=_BC_OUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 _RD_OUT_SCHEMA = "cust bigint, distinct_parts_to_date bigint, seq bigint"
 _RD_STATE_SCHEMA = "n_distinct bigint, seq bigint"
 
@@ -502,9 +294,7 @@ def streaming_running_distinct(lineitem_stream):
     order-date order (the replay harness's guarantee): after the final
     micro-batch each customer's ``distinct_parts_to_date`` equals the
     LAST row of B140's per-customer ledger (pinned, with restart
-    recovery, in tests/test_streaming.py). Same legacy
-    ``applyInPandasWithState`` surface as the MG sketch above (B68
-    documents the API-adaptive story)."""
+    recovery, in tests/test_streaming.py)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fold(key, pdfs, state: GroupState):

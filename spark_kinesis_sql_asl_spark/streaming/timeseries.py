@@ -5,10 +5,8 @@ Round-5 verdict item 4: B110 (OHLC) got its streaming parity twin in round
 operators, each with a batch-parity test in tests/test_streaming.py under
 the staging-dir availableNow replay harness (SURVEY.md §5.2.3).
 
-All three use the legacy ``applyInPandasWithState`` surface (no extra
-runtime dependency — streaming/stateful.py B68 documents the API-adaptive
-story; the semantics port 1:1 to ``transformWithStateInPandas`` typed
-state).
+All three keep their state through ``applyInPandasWithState``, the one
+arbitrary-state API of this package (streaming/stateful.py, B68).
 
 Ordering contract: these folds assume per-key batches arrive in event-time
 order (the replay harness stages files in global (ts, event_id) order, and

@@ -1,5 +1,6 @@
-"""Determinism stress: every query new this round runs TWICE in
-one session and must produce byte-identical canonical output.
+"""Determinism stress: every query the driver has hashed least often (none
+yet, or first in its latest round) runs TWICE in one session and must
+produce byte-identical canonical output.
 
 Motivated by the C111 island-split bug: two window evaluations over a
 non-total sort order let tied rows swap between them, so a query could be
@@ -13,40 +14,39 @@ from __future__ import annotations
 
 import pytest
 
+import __spark_entry__ as entry
 from spark_kinesis_sql_asl_spark.registry import all_queries
 
 from .driver_canon import canon_hash, spark_to_pandas
-from .test_registry_rotation import (
-    LAST_DRIVER_ROUND,
-    REWIRED,
-    ROUND14_NEW_THIS_ROUND,
-    _rows_through,
-)
 
 SF = "/root/testdata/sf0.001"
 
-
-def _never_sampled() -> set[str]:
-    """Queries with no driver row in any committed CORRECTNESS artifact —
-    recomputed, so a new @query joins this stress list automatically."""
-    from spark_kinesis_sql_asl_spark import registry
-
-    registry.load_all()
-    return set(registry._QUERIES) - set(_rows_through(LAST_DRIVER_ROUND))
+# q_ts_stl_decompose's trend window gained a dense-calendar gate after its
+# first driver row: a semantics change, so it is stressed like a new query.
+_REVERIFIED = frozenset({"q_ts_stl_decompose"})
 
 
-# Every query the driver is about to HASH for the first time this round:
-# the never-sampled backlog (this round's additions by construction), the
-# rewired tranche (new oracle or materially changed implementation, so
-# the next hash is effectively a first), plus the staged additions. A
-# driver-green-on-the-lucky-draw query is the failure class this file
-# exists to catch, so stress exactly those rows.
-_FIRST_SAMPLED_THIS_ROUND = sorted(
-    ROUND14_NEW_THIS_ROUND | REWIRED | _never_sampled()
-)
+def _newest_queries() -> set[str]:
+    """Queries with no row in the committed CORRECTNESS ledger, plus those
+    whose first row is in the latest round that added any: recomputed, so a
+    new @query joins this stress list automatically."""
+    first: dict[str, int] = {}
+    ledger = entry._read_ledger()
+    for r in sorted(ledger):
+        for q in ledger[r]:
+            first.setdefault(q, r)
+    newest = max(first.values(), default=0)
+    return {q for q in all_queries() if first.get(q, newest) == newest}
 
 
-@pytest.mark.parametrize("name", _FIRST_SAMPLED_THIS_ROUND)
+# Every query the driver hashed for the first time most recently, or has
+# not hashed yet, plus the re-verified ones. A driver-green-on-the-lucky-draw
+# query is the failure class this file exists to catch, so stress exactly
+# those rows.
+_FIRST_SAMPLED_LATEST = sorted(_newest_queries() | _REVERIFIED)
+
+
+@pytest.mark.parametrize("name", _FIRST_SAMPLED_LATEST)
 def test_double_run_is_identical(spark, name):
     q = all_queries()[name]
     h1 = canon_hash(spark_to_pandas(q(spark, SF)))

@@ -1,324 +1,225 @@
-"""Round-14 rotation window assertions (VERDICT r13 items #1, #2).
+"""Property tests of ``registry.driver_order``, the round driver's order.
 
-The driver samples roughly the first 50 entries of the priority-ordered
-registry for CORRECTNESS_r{N}.json. Rounds 4-13 proved the rotation must be
-*recomputed* (not guessed) each round from the committed CORRECTNESS
-artifacts. Through round 13 the cumulative ledger is fully green and — for
-the first time — EVERY registered query has a driver row at its declared
-oracle level. The round-14 window:
-
-  head slots      the round-14 additions (override 8) — the zero-lag
-                  staging rule made PERMANENT (item #2): any new @query
-                  lands with a driver slot in the SAME round, asserted
-                  structurally below (test_zero_lag_staging_invariant)
-  next slot       the re-verify tranche (override 9): q_ts_stl_decompose's
-                  trend window gained the dense-calendar gate (ADVICE
-                  r13) — a semantics change, so its r13 row is stale
-  then 5 slots    canary 3-round refresh: the 5 canaries last sampled in
-                  r11 (override 10); q_canary_array_semantics (r12)
-                  waits for r15
-  rest            freshness rotation (override 12): q_win_time_range (the
-                  last r3-era row) plus the r4-era cohort — item #1
-                  drained to within the mid-round displacements
-                  (DEFERRED_TO_R15 head the r15 queue)
-
-Rows-only half-frequency rule (VERDICT r11 item #2): a no_oracle query
-that has already run clean >=2x under the driver burns no further window
-slots — asserted below as "the window contains no such query" (only
-q_agg_approx_distinct and q_agg_percentile_approx remain rows-only).
+The driver checks about the first ``DRIVER_WINDOW`` queries of
+``__spark_entry__.queries()`` and commits their rows as
+CORRECTNESS_r{N}.json. ``driver_order`` computes that order from the
+ledger alone; these tests run it over small synthetic ledgers (no files, no
+session). tests/test_spark_entry.py checks the window on the committed
+ledger.
 """
 
 from __future__ import annotations
 
-import json
+import copy
 import os
 import re
 
-import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from spark_kinesis_sql_asl_spark import registry
+from spark_kinesis_sql_asl_spark.registry import (
+    CANARY_CADENCE,
+    DRIVER_WINDOW,
+    driver_order,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-LAST_DRIVER_ROUND = 13
-DRIVER_WINDOW = 50
+_SETTINGS = settings(max_examples=200, deadline=None)
 
-# Queries first registered in round 14: staged into the window at override
-# 8 (no driver row yet by construction). Keep in sync as operators land —
-# test_zero_lag_staging_invariant recomputes the set from the artifacts.
-ROUND14_NEW_THIS_ROUND: frozenset[str] = frozenset(
-    {
-        "q_kinesis_cost_plan",  # A20
-        "q_kinesis_kpl_plan",  # A21 (mid-round)
-        "q_llm_media_dims_riff",  # C177
-        "q_llm_media_dims_pdf",  # C178
-        "q_llm_media_dims_mp4",  # C179 (mid-round)
-        "q_ts_macd",  # B213
-        "q_ts_atr",  # B214 (mid-round)
-        "q_ts_stochastic",  # B215 (mid-round)
-    }
-)
-
-# Each MID-round addition displaces one r4-era freshness name (the window
-# is exactly 50 slots and the additions must stage zero-lag): the
-# displaced names stay pinned at 100 and HEAD the round-15 freshness
-# queue. One name per addition beyond the 4 the round opened with.
-DEFERRED_TO_R15: frozenset[str] = frozenset(
-    {
-        "q_agg_boolcond",
-        "q_agg_decimal",
-        "q_agg_listagg",
-        "q_sort_nulls_first",
-    }
-)
-
-# Queries whose driver row predates their CURRENT semantics (the
-# override-9 tranche): the STL trend window gained the dense-calendar
-# dspan gate this round, which changes output on sparse series.
-REWIRED: frozenset[str] = frozenset({"q_ts_stl_decompose"})
-
-NEW_COUNT = len(ROUND14_NEW_THIS_ROUND)
-REWIRED_COUNT = len(REWIRED)  # 1
-CANARY_REFRESH_ROUND = 11  # cohort last sampled r11 re-enters (3-round rule)
-CANARY_REFRESH_COUNT = 5
-FRESHNESS_TRANCHE_COUNT = (
-    DRIVER_WINDOW - NEW_COUNT - REWIRED_COUNT - CANARY_REFRESH_COUNT
-)
+GREEN = {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
+HASH_RED = {"rows_match": True, "schema_match": True, "hash_match": False, "err": None}
+ERR_RED = {"rows_match": None, "schema_match": None, "hash_match": None, "err": "TypeError"}
+ROWS_ONLY = {"rows_match": None, "schema_match": None, "hash_match": None, "err": "no_oracle"}
+ROW_KINDS = (GREEN, HASH_RED, ERR_RED, ROWS_ONLY)
 
 
-def _ordered():
-    registry.load_all()
-    return registry._ordered_names()
+@st.composite
+def cases(draw):
+    """(names, oracled, ledger): names in a random registration order, some
+    of them canaries; a ledger over a random, possibly gapped, set of
+    rounds that may also hold a query no longer registered."""
+    n_canary = draw(st.integers(0, 4))
+    n_other = draw(st.integers(1, 10))
+    pool = [f"q_canary_{i}" for i in range(n_canary)]
+    pool += [f"q_op_{i}" for i in range(n_other)]
+    names = draw(st.permutations(pool))
+    oracled = draw(st.sets(st.sampled_from(names)))
+    rounds = draw(st.sets(st.integers(1, 8), max_size=5))
+    ledger = {}
+    for r in sorted(rounds):
+        sampled = draw(st.sets(st.sampled_from([*pool, "q_gone"])))
+        ledger[r] = {q: draw(st.sampled_from(ROW_KINDS)) for q in sorted(sampled)}
+    return names, oracled, ledger
 
 
-def _priority(name: str) -> int:
-    return registry._PRIORITY[name][0]
+def _last_sampled(ledger) -> dict[str, int]:
+    return {q: r for r in sorted(ledger) for q in ledger[r]}
 
 
-def _rows_through(last_round: int) -> dict[str, dict]:
-    latest: dict[str, dict] = {}
-    for r in range(1, last_round + 1):
-        path = os.path.join(REPO, f"CORRECTNESS_r{r:02d}.json")
-        if not os.path.exists(path):  # pragma: no cover - driver artifact
-            pytest.skip(f"missing {path}")
-        with open(path) as f:
-            latest.update(json.load(f))
-    return latest
+def _reds(ledger) -> set[str]:
+    if not ledger:
+        return set()
+    latest = ledger[max(ledger)]
+    return {q for q, row in latest.items() if row in (HASH_RED, ERR_RED)}
 
 
-def _last_sampled() -> dict[str, int]:
-    last: dict[str, int] = {}
-    for r in range(1, LAST_DRIVER_ROUND + 1):
-        path = os.path.join(REPO, f"CORRECTNESS_r{r:02d}.json")
-        if not os.path.exists(path):  # pragma: no cover - driver artifact
-            pytest.skip(f"missing {path}")
-        with open(path) as f:
-            for q in json.load(f):
-                last[q] = r
-    return last
-
-
-def _rows_only_clean_counts() -> dict[str, int]:
-    """Per-query count of clean no_oracle driver rows across all rounds."""
-    counts: dict[str, int] = {}
-    for r in range(1, LAST_DRIVER_ROUND + 1):
-        path = os.path.join(REPO, f"CORRECTNESS_r{r:02d}.json")
-        if not os.path.exists(path):  # pragma: no cover - driver artifact
-            pytest.skip(f"missing {path}")
-        with open(path) as f:
-            for q, row in json.load(f).items():
-                if row.get("err") == "no_oracle":
-                    counts[q] = counts.get(q, 0) + 1
-    return counts
-
-
-def _canary_refresh() -> set[str]:
-    last = _last_sampled()
+def _due_canaries(names, ledger) -> set[str]:
+    last = _last_sampled(ledger)
+    next_round = max(ledger, default=0) + 1
     return {
         q
-        for q, r in last.items()
-        if q.startswith("q_canary_") and r == CANARY_REFRESH_ROUND
+        for q in names
+        if q.startswith("q_canary_")
+        and q in last
+        and q not in _reds(ledger)
+        and next_round - last[q] >= CANARY_CADENCE
     }
 
 
-def _freshness_tranche() -> set[str]:
-    """The oldest-last-sampled queries (the r3 remainder, then the whole
-    r4 cohort), minus anything already in another tranche."""
-    last = _last_sampled()
-    registry.load_all()
-    taken = REWIRED | _canary_refresh()
-    queue: set[str] = set()
-    for r in (3, 4):
-        queue |= {
-            q
-            for q, lr in last.items()
-            if lr == r and q in registry._QUERIES and q not in taken
-        }
-    return queue - DEFERRED_TO_R15
-
-
-def test_no_reds_to_recheck():
-    """The cumulative ledger through round 13 is fully green — no query
-    carries override 0 (rows-only ``no_oracle`` rows are sampled-clean)."""
-    latest = _rows_through(LAST_DRIVER_ROUND)
-    reds = {
-        n
-        for n, row in latest.items()
-        if row.get("err") not in (None, "no_oracle")
-        or (
-            row.get("hash_match") is not None
-            and not (
-                row["rows_match"] and row["schema_match"] and row["hash_match"]
-            )
-        )
+def _spent_rows_only(names, oracled, ledger) -> set[str]:
+    runs = {q: 0 for q in names}
+    for rows in ledger.values():
+        for q, row in rows.items():
+            if q in runs and row == ROWS_ONLY:
+                runs[q] += 1
+    return {
+        q
+        for q in names
+        if q not in oracled
+        and runs[q] >= 2
+        and q not in _reds(ledger)
+        and q not in _due_canaries(names, ledger)
     }
-    assert reds == set(), f"unexpected reds: {sorted(reds)}"
-    registry.load_all()
-    at_zero = [n for n in registry._QUERIES if _priority(n) == 0]
-    assert at_zero == [], f"override 0 without a red: {at_zero}"
 
 
-def test_every_query_has_been_driver_sampled():
-    """Round 13 closed the backlog: every query registered BEFORE this
-    round has a driver row (the only unsampled queries are this round's
-    own additions, staged at the front of the window)."""
-    registry.load_all()
-    unsampled = set(registry._QUERIES) - set(
-        _rows_through(LAST_DRIVER_ROUND)
-    )
-    assert unsampled == ROUND14_NEW_THIS_ROUND, (
-        sorted(unsampled - ROUND14_NEW_THIS_ROUND),
-        sorted(ROUND14_NEW_THIS_ROUND - unsampled),
-    )
+@_SETTINGS
+@given(cases())
+def test_order_is_a_permutation(case):
+    names, oracled, ledger = case
+    before = copy.deepcopy((names, oracled, ledger))
+    out = driver_order(names, oracled, ledger)
+    assert sorted(out) == sorted(names)
+    assert len(out) == len(names)
+    assert (names, oracled, ledger) == before  # inputs are not mutated
+
+
+@_SETTINGS
+@given(cases())
+def test_reds_head_the_list(case):
+    """Every query with a red row in the last round comes first, in
+    registration order; a red in an older round does not count."""
+    names, oracled, ledger = case
+    reds = [q for q in names if q in _reds(ledger)]
+    assert driver_order(names, oracled, ledger)[: len(reds)] == reds
+
+
+@_SETTINGS
+@given(cases())
+def test_never_sampled_follow_reds(case):
+    """Queries with no ledger row come right after the reds."""
+    names, oracled, ledger = case
+    n_reds = len(_reds(ledger) & set(names))
+    new = [q for q in names if q not in _last_sampled(ledger)]
+    out = driver_order(names, oracled, ledger)
+    assert out[n_reds : n_reds + len(new)] == new
+
+
+@_SETTINGS
+@given(cases(), st.data())
+def test_appended_red_round_moves_query_to_slot_0(case, data):
+    """A new round whose only red row is ``q`` puts ``q`` at slot 0."""
+    names, oracled, ledger = case
+    q = data.draw(st.sampled_from(names))
+    red = data.draw(st.sampled_from((HASH_RED, ERR_RED)))
+    ledger = {**ledger, max(ledger, default=0) + 1: {q: red}}
+    assert driver_order(names, oracled, ledger)[0] == q
+
+
+@_SETTINGS
+@given(cases())
+def test_canary_cohort_on_three_round_refresh(case):
+    """Canaries whose last row is CANARY_CADENCE or more rounds before the
+    next round follow the never-sampled queries, least recently sampled
+    first; a canary sampled more recently waits with the rest."""
+    names, oracled, ledger = case
+    last = _last_sampled(ledger)
+    lo = len(_reds(ledger) & set(names)) + sum(q not in last for q in names)
+    due = _due_canaries(names, ledger)
+    out = driver_order(names, oracled, ledger)
+    cohort = out[lo : lo + len(due)]
+    assert set(cohort) == due
+    assert cohort == sorted(cohort, key=lambda q: (last[q], names.index(q)))
+
+
+def test_canary_becomes_due_exactly_at_the_cadence():
+    names = ["q_op_a", "q_canary_c", "q_op_b"]
+    ledger = {1: {q: GREEN for q in names}}
+    for r in range(2, 1 + CANARY_CADENCE):
+        assert driver_order(names, set(names), ledger) == names, r
+        ledger[r] = {"q_op_b": GREEN}
+    assert driver_order(names, set(names), ledger)[0] == "q_canary_c"
+
+
+@_SETTINGS
+@given(cases())
+def test_rows_only_half_frequency_rule(case):
+    """A rows-only query with two clean rows can only show again that it
+    runs: it goes to the tail, behind every other query."""
+    names, oracled, ledger = case
+    spent = _spent_rows_only(names, oracled, ledger)
+    out = driver_order(names, oracled, ledger)
+    assert set(out[len(out) - len(spent) :]) == spent
+
+
+def test_spent_rows_only_query_stays_out_of_the_window():
+    names = ["q_rows_only"] + [f"q_op_{i}" for i in range(DRIVER_WINDOW)]
+    oracled = set(names[1:])
+    ledger = {
+        1: {q: (ROWS_ONLY if q == "q_rows_only" else GREEN) for q in names},
+        2: {"q_rows_only": ROWS_ONLY},
+    }
+    assert "q_rows_only" not in driver_order(names, oracled, ledger)[:DRIVER_WINDOW]
+    ledger[2] = {q: GREEN for q in names[1:]}  # one clean run: not yet spent
+    assert driver_order(names, oracled, ledger)[0] == "q_rows_only"
+
+
+@_SETTINGS
+@given(cases())
+def test_rest_follow_last_sampled_order(case):
+    """Between the canary cohort and the spent rows-only tail, queries come
+    least recently sampled first, ties in registration order."""
+    names, oracled, ledger = case
+    last = _last_sampled(ledger)
+    head = (_reds(ledger) & set(names)) | {q for q in names if q not in last}
+    head |= _due_canaries(names, ledger)
+    spent = _spent_rows_only(names, oracled, ledger)
+    out = driver_order(names, oracled, ledger)
+    rest = out[len(head) : len(out) - len(spent)]
+    assert set(rest) == set(names) - head - spent
+    assert rest == sorted(rest, key=lambda q: (last[q], names.index(q)))
+
+
+@_SETTINGS
+@given(cases())
+def test_empty_ledger_gives_registration_order(case):
+    names, oracled, _ = case
+    assert driver_order(names, oracled, {}) == list(names)
 
 
 def test_zero_lag_staging_invariant():
-    """VERDICT r13 item #2's Done bar, the PERMANENT rule: every query
-    with no driver row (i.e. every addition of the current round) must be
-    staged INSIDE the window — recomputed from the artifacts, not from a
-    constant, so forgetting to stage a new @query fails here."""
+    """Over the live registry: queries registered since the last driver
+    round land in the next window with no edit, right behind the reds."""
     registry.load_all()
-    sampled = set(_rows_through(LAST_DRIVER_ROUND))
-    window = set(_ordered()[:DRIVER_WINDOW])
-    unstaged = {
-        n for n in registry._QUERIES if n not in sampled and n not in window
-    }
-    assert unstaged == set(), (
-        f"additions not staged into their own round's window: "
-        f"{sorted(unstaged)}"
-    )
-
-
-def test_round14_additions_head_the_window():
-    """The round-14 additions sit at the FRONT of the window
-    (override 8, slots 0..3), each with an oracle."""
-    registry.load_all()
-    for n in ROUND14_NEW_THIS_ROUND:
-        assert _priority(n) == 8, (n, _priority(n))
-        assert n in registry._ORACLES, f"{n} staged in-window without oracle"
-    head = set(_ordered()[:NEW_COUNT])
-    assert head == ROUND14_NEW_THIS_ROUND, sorted(head)
-
-
-def test_rewired_tranche_follows_additions():
-    """Every query whose semantics changed this round re-verifies THIS
-    round (override 9, slot 4): the STL dense-calendar gate."""
-    registry.load_all()
-    for n in REWIRED:
-        assert n in registry._ORACLES
-        assert _priority(n) == 9, (n, _priority(n))
-    names = _ordered()
-    mid = names[NEW_COUNT : NEW_COUNT + REWIRED_COUNT]
-    assert set(mid) == set(REWIRED), (sorted(mid), sorted(REWIRED))
-
-
-def test_canary_cohort_on_three_round_refresh():
-    """The r11-sampled canary cohort re-enters on the 3-round refresh
-    (override 10, slots 5..9); every other canary stays pinned at 100."""
-    cohort = _canary_refresh()
-    assert len(cohort) == CANARY_REFRESH_COUNT, sorted(cohort)
-    names = _ordered()
-    lo = NEW_COUNT + REWIRED_COUNT
-    mid = names[lo : lo + CANARY_REFRESH_COUNT]
-    assert set(mid) == cohort, (sorted(mid), sorted(cohort))
-    registry.load_all()
-    for n in registry._QUERIES:
-        if n.startswith("q_canary_"):
-            assert _priority(n) == (10 if n in cohort else 100), n
-
-
-def test_freshness_tranche_drains_r3_and_r4_completely():
-    """Remaining slots: the last r3-era row (q_win_time_range) and the
-    r4-era cohort re-enter at override 12 — VERDICT r13 item #1's Done
-    bar ("the oldest ~30 of the r4 cohort") exceeded, minus exactly the
-    names each mid-round addition displaced (DEFERRED_TO_R15, pinned at
-    100, heading the r15 queue)."""
-    tranche = _freshness_tranche()
-    assert len(tranche) == FRESHNESS_TRANCHE_COUNT
-    assert "q_win_time_range" in tranche
-    last = _last_sampled()
-    assert {q for q, r in last.items() if r <= 4} - tranche == DEFERRED_TO_R15
-    registry.load_all()
-    for n in DEFERRED_TO_R15:
-        assert _priority(n) == 100, (n, _priority(n))
-    names = _ordered()
-    lo = NEW_COUNT + REWIRED_COUNT + CANARY_REFRESH_COUNT
-    tail = names[lo : lo + FRESHNESS_TRANCHE_COUNT]
-    assert set(tail) == tranche, (sorted(tail), sorted(tranche))
-    assert all(_priority(n) == 12 for n in tail)
-
-
-def test_window_composition_exact():
-    """additions + 1 rewired + 5 canaries + freshness = the exact
-    50-slot window."""
-    names = _ordered()
-    window = set(names[:DRIVER_WINDOW])
-    expect = (
-        ROUND14_NEW_THIS_ROUND
-        | set(REWIRED)
-        | _canary_refresh()
-        | _freshness_tranche()
-    )
-    assert window == expect, (
-        sorted(window - expect),
-        sorted(expect - window),
-    )
-    assert _priority(names[DRIVER_WINDOW]) == 100
-
-
-def test_rows_only_half_frequency_rule():
-    """VERDICT r11 item #2's Done bar, still enforced: the window contains
-    no rows-only query that has already run clean >=2x under the driver."""
-    registry.load_all()
+    names = list(registry._QUERIES)
     oracled = set(registry._ORACLES)
-    counts = _rows_only_clean_counts()
-    window = set(_ordered()[:DRIVER_WINDOW])
-    offenders = sorted(
-        q for q in window if q not in oracled and counts.get(q, 0) >= 2
-    )
-    assert offenders == [], (
-        f"confirmed rows-only queries re-burning window slots: {offenders}"
-    )
-
-
-def test_every_ever_sampled_query_pinned_at_9_10_12_or_100():
-    """A <100 decorator priority must never leak a driver-green query back
-    into the window at the expense of the rotation plan."""
-    registry.load_all()
-    fresh = _freshness_tranche()
-    canaries = _canary_refresh()
-    for n in sorted(
-        set(_rows_through(LAST_DRIVER_ROUND)) & set(registry._QUERIES)
-    ):
-        p = _priority(n)
-        if n in REWIRED:
-            assert p == 9, f"{n}: rewired tranche must be 9, got {p}"
-        elif n in canaries:
-            assert p == 10, f"{n}: canary refresh must be 10, got {p}"
-        elif n in fresh:
-            assert p == 12, f"{n}: freshness tranche must be 12, got {p}"
-        else:
-            assert p == 100, f"{n}: ever-sampled but priority {p}"
+    new = names[200:203]
+    ledger = {
+        1: {q: GREEN for q in names if q not in new},
+        2: {names[-1]: HASH_RED},
+    }
+    assert driver_order(names, oracled, ledger)[:4] == [names[-1], *new]
 
 
 # ---------------------------------------------------------------------------

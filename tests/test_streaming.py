@@ -628,64 +628,61 @@ def test_streaming_session_window_equals_batch(spark, events_rows, tmp_path):
     assert got == expect
 
 
-# --- B68 (modern API): transformWithStateInPandas -------------------------
+# --- B68 on RocksDB: the product operator under the off-heap provider ----
 
 
-def test_stateful_running_count_api_adaptive(spark, events_rows, tmp_path):
-    # B68 via the API-adaptive product operator (streaming/stateful.py):
-    # transformWithStateInPandas (PySpark 4 StatefulProcessor) when its
-    # protobuf runtime dependency is importable, else the dependency-free
-    # applyInPandasWithState with identical semantics. Either way the
-    # running-count output must equal the batch groupBy count — no skip.
-    from spark_kinesis_sql_asl_spark.streaming.stateful import (
-        _protobuf_available,
-        running_count,
-    )
+def test_stateful_running_count_on_rocksdb(spark, events_rows, tmp_path):
+    # B68's product operator (streaming/stateful.py running_count) keeps
+    # keyed arbitrary state through applyInPandasWithState. The state-store
+    # provider is a session conf, independent of the operator API: under
+    # RocksDBStateStoreProvider the per-key running counts must still equal
+    # the batch groupBy count, and the provider conf is restored after.
+    from spark_kinesis_sql_asl_spark.streaming.stateful import running_count
 
     staging = str(tmp_path / "staging")
     _stage(events_rows, staging, n_files=3)
 
     key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(key, None)
-    if _protobuf_available():
-        # transformWithState requires the RocksDB provider.
-        spark.conf.set(
-            key,
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    spark.conf.set(
+        key,
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     try:
-        out, api = running_count(_stream(spark, staging))
-        expected_api = (
-            "transformWithStateInPandas"
-            if _protobuf_available()
-            else "applyInPandasWithState"
-        )
-        assert api == expected_api
-        _drain(
-            out.writeStream.format("memory")
-            .queryName("tws_counts")
+        q = _drain(
+            running_count(_stream(spark, staging))
+            .writeStream.format("memory")
+            .queryName("rocksdb_running_counts")
             .outputMode("update")
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)
         )
-        got = (
-            spark.table("tws_counts")
-            .groupBy("user_id")
-            .agg(F.max("running_n").alias("n"))  # running_n is monotonic
-        )
-        expect = {
-            r.user_id: r.n
-            for r in table(spark, SF_SMOKE, "events")
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert {r.user_id: r.n for r in got.collect()} == expect
     finally:
         if prev is None:
             spark.conf.unset(key)
         else:
             spark.conf.set(key, prev)
+    assert spark.conf.get(key, None) == prev
+    state_metrics = [
+        m
+        for p in q.recentProgress
+        for op in p["stateOperators"]
+        for m in op.get("customMetrics", {})
+    ]
+    assert any(m.startswith("rocksdb") for m in state_metrics), state_metrics
+    got = (
+        spark.table("rocksdb_running_counts")
+        .groupBy("user_id")
+        .agg(F.max("running_n").alias("n"))  # running_n is monotonic
+    )
+    expect = {
+        r.user_id: r.n
+        for r in table(spark, SF_SMOKE, "events")
+        .groupBy("user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    assert {r.user_id: r.n for r in got.collect()} == expect
 
 
 # --- B65+ : dropDuplicatesWithinWatermark ---------------------------------
@@ -1356,93 +1353,6 @@ def test_dynamic_gap_session_window_matches_batch(spark, events_rows, tmp_path):
     # session must match batch, and most sessions must have emitted.
     assert got <= batch
     assert len(got) >= 0.9 * len(batch)
-
-
-def test_transform_with_state_twin_matches_legacy(spark, tmp_path):
-    """C61s-tws: the transformWithStateInPandas implementation (Spark 4's
-    modern arbitrary-state API, RocksDB-backed typed state handles) must
-    produce EXACTLY the legacy applyInPandasWithState summaries on the
-    same micro-batched stream — the forward-migration guarantee: swap the
-    operator surface, keep the fold."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's state protocol needs protobuf "
-        "(absent in this container)",
-    )
-    from spark_kinesis_sql_asl_spark.streaming.stateful import (
-        streaming_quantile_octaves,
-        streaming_quantile_octaves_tws,
-    )
-
-    ev = (
-        table(spark, SF_SMOKE, "events")
-        .select("event_type", "value")
-        .collect()
-    )
-    staging = str(tmp_path / "tws_stream")
-    os.makedirs(staging)
-    per = (len(ev) + 2) // 3
-    for i in range(3):
-        sl = ev[i * per : (i + 1) * per]
-        tbl = pa.table(
-            {
-                "event_type": pa.array([r.event_type for r in sl], pa.string()),
-                "value": pa.array([r.value for r in sl], pa.float64()),
-            }
-        )
-        f = os.path.join(staging, f"{i:04d}.parquet")
-        pq.write_table(tbl, f)
-        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def final_summaries(op, qname, ckpt, provider=None):
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        if provider:
-            spark.conf.set(key, provider)
-        try:
-            stream = (
-                spark.readStream.schema("event_type string, value double")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(staging)
-            )
-            _drain(
-                op(stream)
-                .writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / ckpt))
-                .trigger(availableNow=True)
-            )
-            return {
-                (r.event_type, r.n, r.p50_oct, r.p90_oct, r.p99_oct)
-                for r in spark.sql(
-                    f"""
-                    SELECT event_type, n, p50_oct, p90_oct, p99_oct FROM (
-                        SELECT *, row_number() OVER (
-                            PARTITION BY event_type ORDER BY seq DESC
-                        ) AS rn FROM {qname}
-                    ) WHERE rn = 1
-                    """
-                ).collect()
-            }
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    legacy = final_summaries(streaming_quantile_octaves, "qh_legacy", "ck_l")
-    tws = final_summaries(
-        streaming_quantile_octaves_tws,
-        "qh_tws",
-        "ck_t",
-        provider=(
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    )
-    assert tws == legacy
-    assert legacy  # non-vacuous
 
 
 # --- B110 streaming twin: tumbling-window OHLC ---------------------------
@@ -3121,102 +3031,3 @@ def test_streaming_atr_equals_batch(spark, events_rows, tmp_path):
             bt["atr_milli"],
             bt["natr_ppm"],
         ), g
-
-
-def test_bounded_contrib_tws_matches_legacy(spark, tmp_path):
-    """B117-tws (round 14, VERDICT r13 item #6): the
-    transformWithStateInPandas bounded-contribution twin must produce
-    EXACTLY the legacy applyInPandasWithState summaries on the same
-    micro-batched stream — the per-key-machinery floor exit, verified
-    where the TWS protobuf dependency exists (import-skips here)."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState's state protocol needs protobuf "
-        "(absent in this container)",
-    )
-    from spark_kinesis_sql_asl_spark.streaming.stateful import (
-        streaming_bounded_contrib,
-        streaming_bounded_contrib_tws,
-    )
-
-    ev = (
-        table(spark, SF_SMOKE, "events")
-        .where(F.col("ts").isNotNull() & F.col("event_type").isNotNull())
-        .select(
-            "user_id",
-            "event_type",
-            F.expr("unix_micros(ts) div 86400000000").alias("day"),
-        )
-        .collect()
-    )
-    staging = str(tmp_path / "bc_stream")
-    os.makedirs(staging)
-    per = (len(ev) + 2) // 3
-    for i in range(3):
-        sl = ev[i * per : (i + 1) * per]
-        tbl = pa.table(
-            {
-                "user_id": pa.array([r.user_id for r in sl], pa.int64()),
-                "event_type": pa.array(
-                    [r.event_type for r in sl], pa.string()
-                ),
-                "day": pa.array([r.day for r in sl], pa.int64()),
-            }
-        )
-        f = os.path.join(staging, f"{i:04d}.parquet")
-        pq.write_table(tbl, f)
-        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-
-    def final_rows(op, qname, ckpt, provider=None):
-        key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(key, None)
-        if provider:
-            spark.conf.set(key, provider)
-        try:
-            stream = (
-                spark.readStream.schema(
-                    "user_id bigint, event_type string, day bigint"
-                )
-                .option("maxFilesPerTrigger", "1")
-                .parquet(staging)
-            )
-            _drain(
-                op(stream, cap=3)
-                .writeStream.format("memory")
-                .queryName(qname)
-                .outputMode("update")
-                .option("checkpointLocation", str(tmp_path / ckpt))
-                .trigger(availableNow=True)
-            )
-            return {
-                (r.user_id, r.event_type, r.day, r.capped_n, r.total_n)
-                for r in spark.sql(
-                    f"""
-                    SELECT user_id, event_type, day, capped_n, total_n
-                    FROM (
-                        SELECT *, row_number() OVER (
-                            PARTITION BY user_id, event_type, day
-                            ORDER BY seq DESC
-                        ) AS rn FROM {qname}
-                    ) WHERE rn = 1
-                    """
-                ).collect()
-            }
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
-
-    legacy = final_rows(streaming_bounded_contrib, "bc_legacy", "bc_ck_l")
-    tws = final_rows(
-        streaming_bounded_contrib_tws,
-        "bc_tws",
-        "bc_ck_t",
-        provider=(
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider"
-        ),
-    )
-    assert tws == legacy
-    assert legacy  # non-vacuous
